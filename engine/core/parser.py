@@ -146,10 +146,33 @@ def extract_html_series(s: pd.Series) -> pd.Series:
 
 
 # ----------------------------------------------------------------- tool JSON
+# a JSON string (an unterminated one runs to the end, so the scan never
+# backtracks) or one bracket
+_JSON_TOKEN = re.compile(r'"(?:[^"\\]|\\.)*"?|[\[\]{}]', re.DOTALL)
+
+
+def _json_too_deep(raw: str) -> bool:
+    """Nesting deeper than spec.JSON_MAX_DEPTH, in one linear scan; the
+    bracket count keeps an ordinary payload at two C-level scans."""
+    if raw.count("[") + raw.count("{") <= spec.JSON_MAX_DEPTH:
+        return False
+    depth = 0
+    for tok in _JSON_TOKEN.findall(raw):
+        if tok in "[{":
+            depth += 1
+            if depth > spec.JSON_MAX_DEPTH:
+                return True
+        elif tok in "]}":
+            depth -= 1
+    return False
+
+
 def _pretty_json(raw: str) -> str:
     try:
+        if _json_too_deep(raw):
+            raise RecursionError(f"nested deeper than {spec.JSON_MAX_DEPTH}")
         pretty = json.dumps(json.loads(raw), indent=2, ensure_ascii=False)
-    except json.JSONDecodeError:
+    except (json.JSONDecodeError, RecursionError):
         pretty = json.dumps(
             {"error": spec.JSON_WRAP_ERROR, "raw_output": raw},
             indent=2,

@@ -76,6 +76,13 @@ def sanitize_stem(name: str) -> str:
 # -------------------------------------------------------------- tool JSON
 FENCE_PREFIX = "```json"            # strip semantics: mistralocr_app.py:386-390
 JSON_WRAP_ERROR = "Failed to parse tool JSON output"  # adapted from :400
+# Tool JSON nested deeper than this (brackets inside strings excluded) is
+# wrapped like unparseable JSON.  The json module recurses once per level,
+# so without a fixed bound the cut-off would follow each process's
+# recursion limit and stack depth: a parse worker wraps 980 levels while a
+# Spark session's own process, whose limit an import raised to 3000,
+# pretty-prints them.
+JSON_MAX_DEPTH = 500
 
 
 # ------------------------------------------------------------ kind detection

@@ -49,6 +49,29 @@ def normalize(text: str) -> str:
 
 
 # ----------------------------------------------------------------- tool JSON
+def _nesting_depth(raw: str) -> int:
+    """Deepest bracket nesting outside JSON strings (a character scan —
+    written apart from the parser's regex version on purpose)."""
+    depth = deepest = 0
+    in_string = escaped = False
+    for ch in raw:
+        if in_string:
+            if escaped:
+                escaped = False
+            elif ch == "\\":
+                escaped = True
+            elif ch == '"':
+                in_string = False
+        elif ch == '"':
+            in_string = True
+        elif ch in "[{":
+            depth += 1
+            deepest = max(deepest, depth)
+        elif ch in "]}":
+            depth -= 1
+    return deepest
+
+
 def extract_tool_json(text: str) -> str:
     raw = text.strip()
     # Exact fence-strip semantics of mistralocr_app.py:386-390.
@@ -58,10 +81,17 @@ def extract_tool_json(text: str) -> str:
         raw = raw[:-3]
     raw = raw.strip()
     # Validate-or-wrap, mistralocr_app.py:393-400.
+    # Nesting deeper than spec.JSON_MAX_DEPTH gets the same wrap; a payload
+    # with fewer brackets than that cannot nest deeper, so skip the scan.
     try:
+        if (
+            raw.count("[") + raw.count("{") > spec.JSON_MAX_DEPTH
+            and _nesting_depth(raw) > spec.JSON_MAX_DEPTH
+        ):
+            raise RecursionError(f"nested deeper than {spec.JSON_MAX_DEPTH}")
         parsed = json.loads(raw)
         pretty = json.dumps(parsed, indent=2, ensure_ascii=False)
-    except json.JSONDecodeError:
+    except (json.JSONDecodeError, RecursionError):
         pretty = json.dumps(
             {"error": spec.JSON_WRAP_ERROR, "raw_output": raw},
             indent=2,

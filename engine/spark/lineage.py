@@ -31,6 +31,7 @@ from __future__ import annotations
 import os
 import uuid
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -113,6 +114,45 @@ def _stage_coverage(stage_out: str, turns_out: str, run_buckets) -> list[int]:
     backfill = _partition_buckets(turns_out) - have - set(run_buckets)
     return sorted(set(run_buckets) | backfill)
 
+
+def _bucket_sigs(src: DataFrame) -> dict[int, int]:
+    """The job's one aggregation of its input: per bucket, the content
+    signature (order-independent bit_xor of per-row xxhash64(conv_id,
+    turn_idx, text))."""
+    rows = src.groupBy("part_hash").agg(
+        F.bit_xor(F.xxhash64("conv_id", "turn_idx", "text")).alias("sig")
+    ).collect()
+    return {int(r["part_hash"]): int(r["sig"]) for r in rows}
+
+
+def quarantine_from_turns(rows: DataFrame, turns: DataFrame) -> DataFrame:
+    """``pipeline.quarantine(rows)`` without a second parse.  ``turns``
+    are the committed turns of the same buckets; (conv_id, turn_idx)
+    names one row.  A committed turn has empty markdown exactly when its
+    payload's parse was empty (``pipeline.extract_turns``), and every
+    blank payload is one of these.  So the quarantined rows are the input
+    rows whose key is among the empty-markdown turns, found by a
+    left-semi join, and the reason follows from the text alone, in
+    Catalyst.  The text is reduced to its blank flag before the join, so
+    only keys and a boolean cross it.  The join strategy is left to the
+    planner and AQE: the key set grows with the corpus, so it is not
+    forced into a broadcast."""
+    empty = turns.where(F.col("markdown") == "").select(
+        F.col("conv_id").alias("_conv_id"), F.col("turn_idx").alias("_turn_idx")
+    )
+    flagged = rows.select(
+        "conv_id", "turn_idx", pipeline.blank_text(F.col("text")).alias("_blank")
+    )
+    hit = flagged.join(
+        empty,
+        F.col("conv_id").eqNullSafe(F.col("_conv_id"))
+        & F.col("turn_idx").eqNullSafe(F.col("_turn_idx")),
+        "left_semi",
+    )
+    reason = F.when(F.col("_blank"), F.lit("empty_payload")).otherwise(
+        F.lit("empty_extraction")
+    )
+    return hit.select("conv_id", "turn_idx", reason.alias("reason"))
 
 
 def changed_buckets_since(
@@ -219,9 +259,13 @@ def run_with_resume(
     xxhash64(conv_id, turn_idx, text) — and a bucket is skipped iff its
     current input signature equals the signature of its latest completed
     run.  Editing one conversation reprocesses exactly its bucket; a new
-    snapshot id with identical content reprocesses nothing.  Costs one
-    extra pass over the input's (conv_id, turn_idx, text) columns — the
-    price of change detection, paid instead of re-extracting everything.
+    snapshot id with identical content reprocesses nothing.
+
+    Every mode aggregates the input once per bucket (``_bucket_sigs``):
+    its keys are the buckets this run processes, its values their lineage
+    signatures.  Each payload is parsed once:
+    ``quarantine=True`` takes its rows from the committed turns with
+    empty markdown (``quarantine_from_turns``), not from a second parse.
 
     Concurrency: each run stamps its lineage rows with a ``run_id``, so
     two drivers racing on the same snapshot at worst double-mark a
@@ -233,18 +277,20 @@ def run_with_resume(
     run_id = run_id or uuid.uuid4().hex
     src = with_part_hash(transcripts, n_buckets)
 
-    def _sig_agg(df: DataFrame) -> dict[int, int]:
-        rows = df.groupBy("part_hash").agg(
-            F.bit_xor(F.xxhash64("conv_id", "turn_idx", "text")).alias("sig")
-        ).collect()
-        return {int(r["part_hash"]): int(r["sig"]) for r in rows}
-
-    cur_sigs: dict[int, int] | None = None
-    if force:
-        pass  # process every bucket present in the input
-    elif detect_changes:
-        # one column-pruned pass over the whole input → ≤ n_buckets sigs
-        cur_sigs = _sig_agg(src)
+    if not (force or detect_changes):
+        done = done_buckets(spark, output_dir, snapshot_id)
+        if done is not None:
+            # broadcast anti-join: the done-set is ≤ n_buckets rows
+            src = src.join(F.broadcast(done), "part_hash", "left_anti")
+    # The bucket set THIS run processes is the key set of the one column-
+    # pruned input aggregation (≤ n_buckets rows).  It scopes the
+    # committed-turns re-read below: if the output dir is reused across
+    # snapshots, partitions left by an older snapshot (buckets absent
+    # from the current input) must not fold into this run's docs or
+    # lineage rows.  In detect_changes mode it covers the whole input.
+    bucket_sigs = _bucket_sigs(src)
+    run_buckets = sorted(bucket_sigs)
+    if detect_changes and not force:
         stored: dict[int, int] = {}
         lin0 = read_lineage(spark, output_dir)
         if lin0 is not None and "bucket_sig" in lin0.columns:
@@ -259,29 +305,10 @@ def run_with_resume(
                 .collect()
             ):
                 stored[int(r["part_hash"])] = int(r["sig"])
-        unchanged = [
-            b for b, s in cur_sigs.items() if stored.get(b) == s
-        ]
+        unchanged = [b for b in run_buckets if stored.get(b) == bucket_sigs[b]]
         if unchanged:
             src = src.filter(~F.col("part_hash").isin(unchanged))
-    else:
-        done = done_buckets(spark, output_dir, snapshot_id)
-        if done is not None:
-            # broadcast anti-join: the done-set is ≤ n_buckets rows
-            src = src.join(F.broadcast(done), "part_hash", "left_anti")
-
-    # The bucket set THIS run processes — a column-pruned key scan that
-    # partial-aggregates to ≤ n_buckets values.  Needed to scope the
-    # committed-turns re-read below: if the output dir is reused across
-    # snapshots, partitions left by an older snapshot (buckets absent
-    # from the current input) must not fold into this run's docs or
-    # lineage rows.
-    if cur_sigs is not None:
-        run_buckets = sorted(set(cur_sigs) - set(unchanged))
-    else:
-        run_buckets = sorted(
-            r["part_hash"] for r in src.select("part_hash").distinct().collect()
-        )
+            run_buckets = sorted(set(run_buckets) - set(unchanged))
 
     turns_out = os.path.join(output_dir, "turns")
     if run_buckets:
@@ -560,16 +587,18 @@ def run_with_resume(
 
     if quarantine:
         # diverted-rows table (error channel, pipeline.quarantine) under
-        # the same backfill-aware coverage rule; computed from the
-        # ORIGINAL payloads — the committed turns don't carry text, but
-        # the input covers done buckets too
+        # the same backfill-aware coverage rule.  The committed turns say
+        # WHICH rows (empty markdown), the ORIGINAL payloads say WHY —
+        # the committed turns don't carry text, but the input covers done
+        # buckets too — so no payload is parsed a second time
         q_out = os.path.join(output_dir, "quarantine")
         need = _stage_coverage(q_out, turns_out, run_buckets)
         if need:
-            all_src = with_part_hash(transcripts, n_buckets)
+            in_need = F.col("part_hash").isin(need)
             qr = with_part_hash(
-                pipeline.quarantine(
-                    all_src.filter(F.col("part_hash").isin(need))
+                quarantine_from_turns(
+                    with_part_hash(transcripts, n_buckets).filter(in_need),
+                    committed.filter(in_need),
                 ),
                 n_buckets,
             )
@@ -710,14 +739,11 @@ def run_with_resume(
                 .parquet(os.path.join(output_dir, "near_dup_clusters"))
             )
 
-    # lineage rows for the buckets processed in this run — collected once
-    # (≤ n_buckets rows) so the aggregation isn't recomputed for a count.
-    # Every row records the bucket's input signature, so any LATER run
-    # can resume by content (detect_changes) regardless of the mode this
-    # run used; in non-detect modes the sig pass covers only the
-    # processed buckets.
-    if run_buckets and cur_sigs is None:
-        cur_sigs = _sig_agg(src)
+    # lineage rows for the buckets processed in this run, counted over
+    # their committed turns in one column-pruned grouped pass (≤ n_buckets
+    # rows collected).  Every row records the bucket's input signature,
+    # so any LATER run can resume by content (detect_changes) regardless
+    # of the mode this run used.
     metrics = (
         new_turns.groupBy("part_hash")
         .agg(
@@ -726,6 +752,8 @@ def run_with_resume(
             F.sum(F.size("images")).alias("image_count"),
         )
         .collect()
+        if run_buckets
+        else []
     )
     now = float(time.time())
     rows = [
@@ -736,7 +764,7 @@ def run_with_resume(
             "turn_count": int(m["turn_count"]),
             "conv_count": int(m["conv_count"]),
             "image_count": int(m["image_count"] or 0),
-            "bucket_sig": (cur_sigs or {}).get(int(m["part_hash"])),
+            "bucket_sig": bucket_sigs[int(m["part_hash"])],
             "ts": now,
             "status": "done",
         }
@@ -749,9 +777,12 @@ def run_with_resume(
             "turn_count long, conv_count long, image_count long, "
             "bucket_sig long, ts double, status string"
         )
+        # One file per run: every later read_lineage lists and opens them
+        # all.  The rows go in as pandas (one Arrow batch): coalescing
+        # the Python-row path to one task doubled the write's time.
         spark.createDataFrame(
-            [tuple(r[c] for c in LINEAGE_COLS) for r in rows], schema=schema
-        ).write.mode("append").parquet(_lineage_path(output_dir))
+            pd.DataFrame(rows, columns=LINEAGE_COLS), schema=schema
+        ).coalesce(1).write.mode("append").parquet(_lineage_path(output_dir))
 
     # total turns from lineage rows (every done bucket of this snapshot
     # has one), NOT a full scan of the committed turns table — at 10^12
@@ -762,7 +793,7 @@ def run_with_resume(
         # fresh run over an empty input: nothing written, nothing done
         return {"buckets_processed": 0, "turns_total": 0}
     if detect_changes:
-        if not cur_sigs:
+        if not bucket_sigs:
             return {"buckets_processed": n_new, "turns_total": 0}
         # content-addressed mode: the live total is the LATEST completed
         # count per bucket, over the buckets present in this input
@@ -770,7 +801,7 @@ def run_with_resume(
             lin.filter(
                 (F.col("status") == "done")
                 & F.col("ts").isNotNull()
-                & F.col("part_hash").isin(sorted(cur_sigs or {}))
+                & F.col("part_hash").isin(sorted(bucket_sigs))
             )
             .groupBy("part_hash")
             .agg(F.max_by("turn_count", "ts").alias("tc"))

@@ -19,7 +19,7 @@ and it is chunk-salted (assemble.assemble_docs).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from engine.core import spec
@@ -28,17 +28,14 @@ from engine.spark import assemble, parse_udf
 TURN_COLUMNS = ["conv_id", "turn_idx", "markdown", "images", "n_blocks_hint"]
 
 
-def extract_turns(transcripts: DataFrame, repartition: int | None = None) -> DataFrame:
+def extract_turns(transcripts: DataFrame) -> DataFrame:
     """transcripts(conv_id, turn_idx, role, text, tool, ts) → turns
     (conv_id, turn_idx, markdown, images).
 
-    ``repartition`` forces a pre-parse round-robin-by-turn shuffle; leave
-    None in production — parquet split sizing already balances the map
-    stage and avoids a full-input shuffle."""
+    One output row per input row.  ``markdown`` is never null, and it is
+    ``""`` exactly when the payload's parse is empty: the assembly steps
+    only replace an image placeholder with longer text."""
     df = transcripts.select("conv_id", "turn_idx", "text")
-    if repartition:
-        # spread by turn (not conv) so skewed conversations can't pin a task
-        df = df.repartition(repartition, "conv_id", "turn_idx")
     parsed = df.withColumn(
         "markdown", parse_udf.extract_markdown_udf(F.col("text"))
     ).drop("text")
@@ -160,6 +157,15 @@ PY_WS_CLASS = (
 )
 
 
+def blank_text(text: Column) -> Column:
+    """Null or whitespace-only payload — the parser's KIND_EMPTY rule
+    (Python ``str.strip``).  Both Java's and RE2's ``\\s`` are
+    ASCII-only, so PY_WS_CLASS spells the full Python-isspace set as
+    literal characters; the same class string works verbatim in Spark
+    ``rlike`` and the DuckDB oracle."""
+    return text.isNull() | text.rlike(f"^{PY_WS_CLASS}*$")
+
+
 def quarantine(transcripts: DataFrame) -> DataFrame:
     """Error channel for malformed payloads — the batch analog of the
     reference's per-page error-marker semantics (translate stage,
@@ -177,15 +183,8 @@ def quarantine(transcripts: DataFrame) -> DataFrame:
     base = transcripts.select(
         "conv_id", "turn_idx", "text", md.alias("markdown")
     )
-    # blank must match the parser's KIND_EMPTY rule (Python str.strip):
-    # both Java's and RE2's \s are ASCII-only, so PY_WS_CLASS spells the
-    # full Python-isspace set as literal characters — the same class
-    # string works verbatim in Spark rlike and the DuckDB oracle
-    blank = F.col("text").isNull() | F.col("text").rlike(
-        f"^{PY_WS_CLASS}*$"
-    )
     reason = (
-        F.when(blank, F.lit("empty_payload"))
+        F.when(blank_text(F.col("text")), F.lit("empty_payload"))
         .when(F.length("markdown") == 0, F.lit("empty_extraction"))
     )
     return (

@@ -53,7 +53,9 @@ def main(argv: list[str] | None = None) -> int:
                          "over the compact signature table)")
     ap.add_argument("--quarantine", action="store_true",
                     help="also write the diverted-rows error-channel "
-                         "table (empty/tag-only payloads with reasons)")
+                         "table (empty/tag-only payloads with reasons); "
+                         "taken from the committed turns with empty "
+                         "markdown, so no payload is parsed twice")
     ap.add_argument("--curate", action="store_true",
                     help="also write the per-conversation curation "
                          "metrics table (repetition/quality + PII "

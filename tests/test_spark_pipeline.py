@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from engine import fixtures, oracle
-from engine.core import spec
+from engine.core import parser, spec
 from engine.spark import lineage, pipeline
 from engine.spark.session import get_spark
 
@@ -584,6 +584,170 @@ def test_dedup_quarantine_backfill_on_completed_run(spark, transcripts_pdf, tmp_
     qr = spark.read.parquet(os.path.join(out, "quarantine"))
     assert qr.count() == n_blanks
     assert qr.where(F.col("reason") != "empty_payload").count() == 0
+
+
+def _hostile_corpus(transcripts_pdf) -> pd.DataFrame:
+    """The fixture corpus plus q_quarantine's hostile payloads: null,
+    empty, spaces, tab/newline, NBSP and tag-only HTML, next to a kept
+    HTML row."""
+    texts = [None, "", "   ", "\t\n", "\u00a0", "<div>  </div>", "<p>kept</p>"]
+    bad = pd.DataFrame(
+        {
+            "conv_id": [f"zz-bad-{i % 3}" for i in range(len(texts))],
+            "turn_idx": list(range(len(texts))),
+            "role": ["user"] * len(texts),
+            "text": texts,
+            "tool": [""] * len(texts),
+            "ts": [transcripts_pdf["ts"].iloc[0]] * len(texts),
+        }
+    )
+    full = pd.concat([transcripts_pdf, bad], ignore_index=True)
+    full["ts"] = full["ts"].dt.as_unit("us")  # concat upcasts to ns
+    return full
+
+
+def _quarantine_rows(df) -> list:
+    return sorted(
+        tuple(r) for r in df.select("conv_id", "turn_idx", "reason").collect()
+    )
+
+
+def test_quarantine_stage_equals_pipeline_quarantine(
+    spark, transcripts_pdf, tmp_path
+):
+    """The single-parse quarantine stage writes exactly
+    pipeline.quarantine(input) on the fresh, backfill and one-bucket
+    detect_changes paths."""
+    full = _hostile_corpus(transcripts_pdf)
+    p1 = str(tmp_path / "in1.parquet")
+    full.to_parquet(p1, index=False)
+    df1 = spark.read.parquet(p1)
+    want1 = _quarantine_rows(pipeline.quarantine(df1))
+    assert {r[2] for r in want1} == {"empty_payload", "empty_extraction"}
+
+    def got(out):
+        return _quarantine_rows(
+            spark.read.parquet(os.path.join(out, "quarantine"))
+        )
+
+    fresh = str(tmp_path / "fresh")
+    r = lineage.run_with_resume(spark, df1, fresh, snapshot_id="s",
+                                n_buckets=8, quarantine=True)
+    assert r["buckets_processed"] > 0
+    assert got(fresh) == want1
+
+    backfill = str(tmp_path / "backfill")
+    lineage.run_with_resume(spark, df1, backfill, snapshot_id="s", n_buckets=8)
+    r = lineage.run_with_resume(spark, df1, backfill, snapshot_id="s",
+                                n_buckets=8, quarantine=True)
+    assert r["buckets_processed"] == 0
+    assert got(backfill) == want1
+
+    out = str(tmp_path / "detect")
+    lineage.run_with_resume(spark, df1, out, snapshot_id="d1", n_buckets=8,
+                            quarantine=True, detect_changes=True)
+    # one bucket's edit: the kept row turns tag-only, a blank row gets text
+    edited = full.copy()
+    kept = (edited["conv_id"] == "zz-bad-0") & (edited["turn_idx"] == 6)
+    blank = (edited["conv_id"] == "zz-bad-0") & (edited["turn_idx"] == 3)
+    edited.loc[kept, "text"] = "<span></span>"
+    edited.loc[blank, "text"] = "now has text"
+    p2 = str(tmp_path / "in2.parquet")
+    edited.to_parquet(p2, index=False)
+    df2 = spark.read.parquet(p2)
+    r = lineage.run_with_resume(spark, df2, out, snapshot_id="d2",
+                                n_buckets=8, quarantine=True,
+                                detect_changes=True)
+    assert r["buckets_processed"] == 1
+    want2 = _quarantine_rows(pipeline.quarantine(df2))
+    assert want2 != want1
+    assert got(out) == want2
+
+
+def test_quarantine_stage_runs_no_python_udf(spark, transcripts_path, tmp_path):
+    """The quarantine stage's executed plan has no Python-UDF node: the
+    payloads are parsed once, by the turns write."""
+    out = str(tmp_path / "out")
+    df = spark.read.parquet(transcripts_path)
+    lineage.run_with_resume(spark, df, out, snapshot_id="s", n_buckets=8)
+    committed = spark.read.parquet(os.path.join(out, "turns"))
+
+    def executed_plan(q):
+        q.collect()
+        return q._jdf.queryExecution().executedPlan().toString()
+
+    stage = executed_plan(lineage.quarantine_from_turns(df, committed))
+    assert "Join" in stage, stage
+    for node in ("ArrowEvalPython", "BatchEvalPython"):
+        assert node not in stage, stage
+    # the check sees the node where a parse does run
+    assert "ArrowEvalPython" in executed_plan(pipeline.quarantine(df))
+
+
+def test_lineage_counts_equal_committed_turns(spark, transcripts_path, tmp_path):
+    """Lineage turn/conv/image counts equal a groupBy over the committed
+    turns, and each bucket's signature equals that of its input rows."""
+    out = str(tmp_path / "out")
+    df = spark.read.parquet(transcripts_path)
+    lineage.run_with_resume(spark, df, out, snapshot_id="s", n_buckets=8)
+    counts = (
+        spark.read.parquet(os.path.join(out, "turns"))
+        .groupBy("part_hash")
+        .agg(
+            F.count("*").alias("turn_count"),
+            F.countDistinct("conv_id").alias("conv_count"),
+            F.sum(F.size("images")).alias("image_count"),
+        )
+    )
+    sigs = (
+        lineage.with_part_hash(df, 8)
+        .groupBy("part_hash")
+        .agg(F.bit_xor(F.xxhash64("conv_id", "turn_idx", "text")).alias("sig"))
+    )
+    want = sorted(tuple(r) for r in counts.join(sigs, "part_hash").collect())
+    assert len(want) > 1 and sum(r[3] for r in want) > 0
+    got = sorted(
+        tuple(r)
+        for r in spark.read.parquet(os.path.join(out, "_lineage"))
+        .select("part_hash", "turn_count", "conv_count", "image_count",
+                "bucket_sig")
+        .collect()
+    )
+    assert got == want
+
+
+def test_lineage_one_file_per_run(spark, transcripts_path, tmp_path):
+    """Each run appends its lineage rows as one parquet file."""
+    out = str(tmp_path / "out")
+    lin = os.path.join(out, "_lineage")
+    df = spark.read.parquet(transcripts_path)
+
+    def n_files():
+        return sum(f.endswith(".parquet") for f in os.listdir(lin))
+
+    for i in (1, 2):
+        r = lineage.run_with_resume(spark, df, out, snapshot_id="s",
+                                    n_buckets=8, force=True)
+        assert r["buckets_processed"] > 1
+        assert n_files() == i
+
+
+@pytest.mark.parametrize("depth", [500, 1_000, 100_000])
+def test_deep_json_nesting(spark, depth):
+    """Tool JSON nested deeper than spec.JSON_MAX_DEPTH gets the
+    reference's error-wrapped JSON, not a RecursionError, from the
+    parser, the oracle and extract_turns alike; up to the bound it is
+    pretty-printed.  The bound holds in every process, whatever its
+    recursion limit (running a UDF raises this process's to 3000)."""
+    text = "[" * depth + "]" * depth
+    want = oracle.process_turn("c", 0, text).markdown
+    wrapped = want.startswith('```json\n{\n  "error": "' + spec.JSON_WRAP_ERROR)
+    assert wrapped == (depth > spec.JSON_MAX_DEPTH)
+    assert parser.extract_markdown_series(pd.Series([text])).iloc[0] == want
+    df = spark.createDataFrame(
+        [("c", 0, text)], "conv_id string, turn_idx int, text string"
+    )
+    assert pipeline.extract_turns(df).first()["markdown"] == want
 
 
 def test_all_stages_backfill_on_half_completed_resume(
