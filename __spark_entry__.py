@@ -8400,7 +8400,7 @@ def q_mad_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB twin recomputes the identical rank/average arithmetic with
     window functions (fine single-node, the shape Spark must avoid)."""
     return diagnose.mad_flags(
-        _t(spark, sf_dir, "events"), "event_type", "value", "event_id"
+        _t(spark, sf_dir, "events"), "event_type", "value"
     ).orderBy("event_type")
 
 

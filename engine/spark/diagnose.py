@@ -1051,7 +1051,6 @@ def mad_flags(
     df: DataFrame,
     key_col: str,
     value_col: str,
-    id_col: str,
     k: float = 3.0,
 ) -> DataFrame:
     """Robust per-key outlier summary via MAD (median absolute
@@ -1068,8 +1067,7 @@ def mad_flags(
     range shuffles, the deviation derivation and the final outlier
     count all work on that compressed table (weights expand ranks
     exactly, so every emitted value is bit-identical to ranking the
-    raw rows; ``id_col`` is unused beyond the contract — kept for
-    call-site compatibility).  When values are near-unique the cost
+    raw rows).  When values are near-unique the cost
     degrades gracefully to the uncompressed shape; when they repeat
     (discrete measures, currencies, counters) the shuffles shrink by
     the compression ratio.

@@ -11,7 +11,7 @@ Replaces the reference's pickle checkpoints
     (input_snapshot_id, run_id, part_hash, turn_count, conv_count,
     image_count, bucket_sig, ts, status) is appended;
   * on restart, buckets with status='done' for the same input snapshot
-    are skipped (anti-join) — or, with ``detect_changes``, buckets whose
+    are skipped — or, with ``detect_changes``, buckets whose
     CONTENT signature matches their latest completed run (incremental
     recompute independent of snapshot ids); outputs are written with
     dynamic partition overwrite keyed on part_hash, so replays are
@@ -28,13 +28,18 @@ Iceberg catalog slots in unchanged.
 
 from __future__ import annotations
 
+import inspect
 import os
+import re
+import time
 import uuid
+from typing import Callable, NamedTuple
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
+from engine.core import spec
 from engine.spark import pipeline
 
 LINEAGE_COLS = [
@@ -61,16 +66,23 @@ def _lineage_path(output_dir: str) -> str:
 
 
 def read_lineage(spark: SparkSession, output_dir: str) -> DataFrame | None:
+    """The lineage rows, or None when no run has completed a bucket."""
     path = _lineage_path(output_dir)
-    # cheap existence probe first — avoids a logged (though caught)
-    # PATH_NOT_FOUND exception on every fresh run
-    if not os.path.exists(path):
+    # An explicit list of the files: Spark counts a directory whose name
+    # starts with "_" as hidden and logs a WARN on every read of it (a
+    # glob logs a caught FileNotFoundException instead).  Listing first
+    # also keeps fresh runs from probing a missing path.
+    names = os.listdir(path) if os.path.isdir(path) else []
+    files = sorted(
+        os.path.join(path, f) for f in names if f.endswith(".parquet")
+    )
+    if not files:
         return None
     try:
         # mergeSchema: lineage files written by older engine versions may
         # lack newer columns (bucket_sig, ts) — union the footers so they
         # surface as nulls instead of being silently dropped
-        return spark.read.option("mergeSchema", "true").parquet(path)
+        return spark.read.option("mergeSchema", "true").parquet(*files)
     except Exception:
         return None
 
@@ -104,14 +116,16 @@ def _partition_buckets(path: str) -> set[int]:
     return out
 
 
-def _stage_coverage(stage_out: str, turns_out: str, run_buckets) -> list[int]:
+def _stage_coverage(
+    stage_out: str, committed: set[int], run_buckets: list[int]
+) -> list[int]:
     """Buckets a derived stage must (re)write: this run's buckets plus
-    any committed turns buckets the stage's table doesn't cover yet —
-    the backfill rule shared by spans / translate / quarantine /
-    fingerprints / signatures (a completed extraction re-run with a
-    stage newly enabled must fill it for already-done buckets)."""
+    any ``committed`` turns buckets the stage's table doesn't cover yet —
+    the backfill rule shared by every stage (a completed extraction
+    re-run with a stage newly enabled must fill it for already-done
+    buckets)."""
     have = _partition_buckets(stage_out)
-    backfill = _partition_buckets(turns_out) - have - set(run_buckets)
+    backfill = committed - have - set(run_buckets)
     return sorted(set(run_buckets) | backfill)
 
 
@@ -188,6 +202,19 @@ def read_turns_since(
     return df.filter(F.col("part_hash").isin(buckets))
 
 
+def _write_buckets(df: DataFrame, path: str) -> None:
+    """Write ``df`` as a table partitioned on its ``part_hash`` column.
+    Idempotent resume REQUIRES dynamic partition overwrite (the static
+    default wipes previously committed buckets); it is set per write so
+    the shared session's conf is never mutated."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("part_hash")
+        .parquet(path)
+    )
+
+
 def compact_turns(
     spark: SparkSession,
     output_dir: str,
@@ -214,14 +241,322 @@ def compact_turns(
 
     before = _count_files()
     df = spark.read.parquet(turns_out)
-    (
-        df.repartition("part_hash")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("part_hash")
-        .parquet(turns_out)
-    )
+    _write_buckets(df.repartition("part_hash"), turns_out)
     return {"files_before": before, "files_after": _count_files()}
+
+
+def _lineage_state(
+    spark: SparkSession, output_dir: str, snapshot_id: str
+) -> dict[int, Row]:
+    """The job's one read of ``_lineage``: per bucket with a completed
+    run (≤ n_buckets rows), ``snap_tc`` — the max turn_count recorded for
+    ``snapshot_id`` (None if the snapshot never completed the bucket) —
+    and the ``sig`` and ``turn_count`` of the latest completed run.  Rows
+    lacking a timestamp or signature (files written before those columns
+    existed) never count as the latest."""
+    lin = read_lineage(spark, output_dir)
+    if lin is None:
+        return {}
+    for col, typ in (("bucket_sig", "long"), ("ts", "double")):
+        if col not in lin.columns:
+            lin = lin.withColumn(col, F.lit(None).cast(typ))
+    snap = F.col("input_snapshot_id") == snapshot_id
+    sig_ts = F.when(F.col("bucket_sig").isNotNull(), F.col("ts"))
+    rows = (
+        lin.filter(F.col("status") == "done")
+        .groupBy("part_hash")
+        .agg(
+            F.max(F.when(snap, F.col("turn_count"))).alias("snap_tc"),
+            F.max_by("bucket_sig", sig_ts).alias("sig"),
+            F.max_by("turn_count", "ts").alias("turn_count"),
+        )
+        .collect()
+    )
+    return {int(r["part_hash"]): r for r in rows}
+
+
+def _regex_literal(text: str) -> str:
+    """``text`` as a JVM regex that matches it literally."""
+    quoted = re.sub(r"[\\.^$|?*+()\[\]{}]", lambda m: "\\" + m.group(), text)
+    return quoted.replace("\n", r"\n")
+
+
+# Assembly artifacts a document carries besides its content: the OCR
+# stub block of every image (``spec.OCR_BLOCK_PREFIX`` without its leading
+# blank line, the OCR JSON, ``spec.OCR_BLOCK_SUFFIX``) and image embeds.
+_OCR_BLOCK_RX = (
+    "(?s)"
+    + _regex_literal(spec.OCR_BLOCK_PREFIX.lstrip("\n"))
+    + ".*?"
+    + _regex_literal(spec.OCR_BLOCK_SUFFIX)
+)
+_IMAGE_EMBED_RX = r"!\[[^\]]*\]\([^)]*\)"
+
+
+def doc_content(markdown: Column) -> Column:
+    """Assembled markdown with its OCR stub blocks and image embeds
+    removed — the text the curation metrics and near-dup signatures are
+    computed over."""
+    return F.regexp_replace(
+        F.regexp_replace(markdown, _OCR_BLOCK_RX, ""), _IMAGE_EMBED_RX, ""
+    )
+
+
+def _build_spans(turns: DataFrame) -> DataFrame:
+    # char spans of every markdown block; looked up per call, so a test can
+    # make pipeline.extract_spans fail mid-job
+    return pipeline.extract_spans(turns)
+
+
+def _build_translated_docs(turns: DataFrame) -> DataFrame:
+    # translated documents (T1 + P4 over the translated pages,
+    # mistralocr_app.py:717), derived from the committed turns per bucket
+    from engine.spark import translate as tmod
+
+    return tmod.translated_docs(tmod.translate_turns(turns))
+
+
+def _build_curation(
+    docs: DataFrame, curate_max_dup_bigram: float, curate_min_tokens: int
+) -> DataFrame:
+    # Per-conversation curation metrics table (round-4 quality ops:
+    # repetition stats + PII counts over the assembled documents) — the
+    # scores a 10^12-turn corpus filter/monitor job reads instead of
+    # re-scanning text.  Derived from the committed docs table, so it is
+    # incremental per bucket and a completed run re-executed with
+    # curate=True backfills every bucket.
+    from engine.spark import text as etext
+
+    # Metrics over CONTENT, not assembly artifacts: the inserted OCR stub
+    # blocks, image embeds and rewritten link targets carry conv-id digit
+    # runs and repeated boilerplate that would pollute both the
+    # repetition ratios and the PII regex counts (an 8-digit conv id
+    # segment matches the conservative phone pattern) — same
+    # normalization rationale as the near-dup signature input.
+    content = F.regexp_replace(
+        doc_content(F.col("markdown")), r"\]\([^)]*\)", "]()"
+    )
+    docs_for = docs.select(
+        F.col("conv_id").alias("doc_id"), content.alias("text")
+    )
+    rep = etext.repetition_stats(docs_for)
+    # LEFT join from the PII side: pii_scrub is a projection (exactly one
+    # row per conversation), while repetition_stats yields no row for a
+    # conv whose normalized content is empty (e.g. all OCR stubs) — an
+    # inner join would silently drop those convs from the curation table
+    # AND leave their bucket partition unwritten, so _stage_coverage would
+    # re-queue it forever.  Empty-content convs keep a row with
+    # n_tokens=0 and NULL ratios.
+    pii = etext.pii_scrub(docs_for).drop("clean_text")
+    # the quality gate (same semantics as the corpus_curation contract
+    # query: NULL metrics fail the gate).  Thresholds are evaluated at
+    # WRITE time and stored alongside the raw metrics, so a consumer can
+    # always re-derive `keep` with different cutoffs from the same table
+    # without re-scanning text; dedup keep-lists are the --dedup stage's
+    # job, not curation's.
+    kept = F.coalesce(
+        F.col("dup_bigram_ratio") <= curate_max_dup_bigram, F.lit(False)
+    ) & F.coalesce(F.col("n_tokens") >= curate_min_tokens, F.lit(False))
+    return pii.join(rep, "doc_id", "left").select(
+        F.col("doc_id").alias("conv_id"),
+        F.coalesce("n_tokens", F.lit(0)).cast("long").alias("n_tokens"),
+        F.coalesce("n_distinct", F.lit(0)).cast("long").alias("n_distinct"),
+        "distinct_ratio",
+        "top_share",
+        "dup_bigram_ratio",
+        "n_emails",
+        "n_ips",
+        "n_phones",
+        kept.alias("keep"),
+    )
+
+
+def _build_line_counts(docs: DataFrame) -> DataFrame:
+    # Cross-document line dedup, split at the same seam as --dedup: (1)
+    # per-bucket line-fingerprint DOC-counts — the pass that touches
+    # document text — incremental + backfill-aware; (2) the global
+    # boilerplate-line table (_publish_boilerplate).  Summing per-bucket
+    # DISTINCT-conv counts is exact because a conversation never spans
+    # buckets (part_hash is a function of conv_id), so no conv is
+    # double-counted across bucket rows.
+    from engine.spark.dedup import portable_hash60
+
+    # same id-blank normalization as --dedup: assembled markdown embeds
+    # conv_id in link paths/OCR stubs, which would make every such line
+    # unique per conversation and invisible to the cross-document
+    # frequency count
+    content = F.expr("replace(markdown, conv_id, '<conv>')")
+    lines = docs.select(
+        "conv_id", "part_hash", F.explode(F.split(content, "\n")).alias("line")
+    )
+    return lines.groupBy(
+        "part_hash", portable_hash60(F.col("line")).alias("lfp")
+    ).agg(F.countDistinct("conv_id").alias("n_docs"))
+
+
+def _publish_boilerplate(
+    counts: DataFrame, line_dedup_min_df: int, stale_buckets: list[int]
+) -> DataFrame:
+    # A sum over the compact counts table only (8-byte keys + counts,
+    # never text), wholesale-overwritten, cheap to recompute.  A consumer
+    # strips boilerplate by anti-joining exploded doc lines against
+    # boilerplate_lines on the fingerprint; the threshold is evaluated at
+    # READ time of the counts, so re-publishing with a different min_df
+    # needs no text re-scan.
+    if stale_buckets:
+        raise RuntimeError(
+            f"line-dedup counts are stale for buckets {stale_buckets[:8]}; "
+            "refusing to publish boilerplate_lines from a partial counts table"
+        )
+    return (
+        counts.groupBy("lfp")
+        .agg(F.sum("n_docs").alias("line_df"))
+        .where(F.col("line_df") >= line_dedup_min_df)
+    )
+
+
+def _build_conv_curation(
+    rows: DataFrame, conv_min_turns: int, conv_max_repeat: float
+) -> DataFrame:
+    # Conversation-level curation (transcript_curation): run-collapse
+    # repeat ratio, alternation violations and the SFT-usability gate.
+    # Computed from the ORIGINAL transcripts (role/text never reach the
+    # committed turns table — the parse stage prunes them), and
+    # conversations never split across buckets (part_hash is a function
+    # of conv_id), so the metrics are bucket-local.
+    from engine.spark import conversation
+
+    return conversation.transcript_curation(
+        rows.select("conv_id", "turn_idx", "role", "text"),
+        min_turns=conv_min_turns,
+        max_repeat_ratio=conv_max_repeat,
+    )
+
+
+def _build_fingerprints(docs: DataFrame) -> DataFrame:
+    # Two-phase dedup: (1) per-bucket document fingerprints — the
+    # expensive pass — are incremental and backfill-aware; (2) exact-dup
+    # clusters are a GLOBAL reduction, but over the compact fingerprint
+    # table (one row per conversation, not per turn), so rewriting them
+    # every run costs one small groupBy, never a corpus re-scan.
+    from engine.spark.text import fingerprint as fp_col
+
+    # id-normalized content fingerprint: the assembled markdown embeds
+    # conv_id (image link paths, OCR stubs), so a re-ingested
+    # conversation under a NEW id would never match its twin — blank the
+    # id out before hashing
+    content = F.expr("replace(markdown, conv_id, '<conv>')")
+    return docs.select(
+        "conv_id",
+        fp_col(content).alias("fp"),
+        F.length("markdown").alias("n_chars"),
+        "part_hash",
+    )
+
+
+def _publish_dup_clusters(fps: DataFrame) -> DataFrame:
+    return (
+        fps.groupBy("fp")
+        .agg(
+            F.min("conv_id").alias("keep_conv_id"),
+            F.count("*").alias("n_members"),
+        )
+        .where(F.col("n_members") >= 2)
+    )
+
+
+def _build_signatures(docs: DataFrame) -> DataFrame:
+    # Near-dup clustering split at the right seam: (1) MinHash signatures
+    # — the pass that touches document text — are per-bucket incremental
+    # + backfill-aware; (2) pair generation + connected components run
+    # globally (_publish_near_dup_clusters).
+    from engine.spark import dedup as dmod
+
+    # hash CONTENT, not assembly artifacts: the OCR-stub blocks and image
+    # links the pipeline inserts are near-identical across conversations
+    # once the id is normalized out, so leaving them in makes image-heavy
+    # documents look like near-dups of each other regardless of their
+    # actual text
+    sigs = dmod.minhash_signatures(
+        docs.select(
+            F.col("conv_id").alias("doc_id"),
+            doc_content(F.col("markdown")).alias("text"),
+        ),
+        num_perm=32,
+    )
+    return sigs.select(F.col("doc_id").alias("conv_id"), "sig")
+
+
+def _publish_near_dup_clusters(sigs: DataFrame) -> DataFrame:
+    # over the compact signature table (one 32-long array per
+    # conversation): a banded equi-join + O(log n) star rounds — never a
+    # corpus re-scan or an all-pairs product
+    from engine.spark import dedup as dmod
+
+    pairs = dmod.minhash_pairs_from_signatures(
+        sigs.select(F.col("conv_id").alias("doc_id"), "sig"),
+        num_perm=32,
+        bands=16,
+        min_jaccard=0.8,
+    )
+    return dmod.connected_components(pairs).selectExpr(
+        "doc_id AS conv_id", "cluster_id AS cluster_conv_id"
+    )
+
+
+class Stage(NamedTuple):
+    """A derived table of ``run_with_resume``, kept per bucket."""
+
+    flag: str  # the run_with_resume keyword that enables it
+    out: str  # its bucket-partitioned table under the output dir
+    # what ``build`` reads, each restricted to the buckets to (re)write:
+    # the committed "turns" or "docs", or the raw "input" rows
+    sources: tuple[str, ...]
+    # sources → the stage rows; run options are passed by parameter name
+    build: Callable[..., DataFrame]
+    # the global table rewritten from the whole stage table after each
+    # run, and the function computing it
+    publish: str | None = None
+    publish_build: Callable[..., DataFrame] | None = None
+
+
+# Every stage follows the rule of the reference's checkpoints: skip what
+# is done, compute and save the rest — per bucket, with backfill
+# (_stage_coverage).  Coverage is driven by the COMMITTED turns table, not
+# this run's delta, so a completed extraction re-run with a stage newly
+# enabled fills it for already-done buckets.
+STAGES = (
+    Stage("spans", "spans", ("turns",), _build_spans),
+    Stage("translate", "docs_translated", ("turns",), _build_translated_docs),
+    Stage("curate", "curation", ("docs",), _build_curation),
+    Stage(
+        "line_dedup", "line_counts", ("docs",), _build_line_counts,
+        "boilerplate_lines", _publish_boilerplate,
+    ),
+    Stage("conv_curate", "conv_curation", ("input",), _build_conv_curation),
+    # diverted-rows table (error channel, pipeline.quarantine): the
+    # committed turns say WHICH rows (empty markdown), the ORIGINAL
+    # payloads say WHY — the committed turns don't carry text, but the
+    # input covers done buckets too — so no payload is parsed a second
+    # time
+    Stage(
+        "quarantine", "quarantine", ("input", "turns"), quarantine_from_turns
+    ),
+    Stage(
+        "dedup", "fingerprints", ("docs",), _build_fingerprints,
+        "dup_clusters", _publish_dup_clusters,
+    ),
+    Stage(
+        "near_dup", "signatures", ("docs",), _build_signatures,
+        "near_dup_clusters", _publish_near_dup_clusters,
+    ),
+)
+
+
+def _call(fn: Callable[..., DataFrame], frames: list, opts: dict) -> DataFrame:
+    """``fn(*frames)`` plus the run options ``fn`` names as parameters."""
+    names = inspect.signature(fn).parameters
+    return fn(*frames, **{k: v for k, v in opts.items() if k in names})
 
 
 def run_with_resume(
@@ -247,7 +582,8 @@ def run_with_resume(
     detect_changes: bool = False,
     run_id: str | None = None,
 ) -> dict[str, int]:
-    """Extract turns+docs (+spans) with bucket-granular resume.
+    """Extract turns+docs, plus the ``STAGES`` whose flags are set, with
+    bucket-granular resume.
 
     Returns counts of processed buckets/turns (0 processed ⇒ everything
     was already done — the reference's 'checkpoint found, skipping'
@@ -261,27 +597,51 @@ def run_with_resume(
     run.  Editing one conversation reprocesses exactly its bucket; a new
     snapshot id with identical content reprocesses nothing.
 
-    Every mode aggregates the input once per bucket (``_bucket_sigs``):
-    its keys are the buckets this run processes, its values their lineage
-    signatures.  Each payload is parsed once:
+    Every mode reads the lineage table once, at job start
+    (``_lineage_state``), and aggregates the input once per bucket
+    (``_bucket_sigs``): its keys are the buckets this run processes, its
+    values their lineage signatures.  Each payload is parsed once:
     ``quarantine=True`` takes its rows from the committed turns with
     empty markdown (``quarantine_from_turns``), not from a second parse.
 
-    Concurrency: each run stamps its lineage rows with a ``run_id``, so
-    two drivers racing on the same snapshot at worst double-mark a
-    bucket 'done' with identical counts — ``turns_total`` aggregates
-    ``max(turn_count)`` per bucket, which is exact under that race (the
-    writes themselves are idempotent dynamic partition overwrites)."""
-    import time
-
+    ``turns_total`` counts the lineage state at job start plus this run's
+    rows: the sum over buckets of ``max(turn_count)`` for this snapshot,
+    or, with ``detect_changes``, of the latest turn_count of each bucket
+    in the input.  Concurrency: each run stamps its lineage rows with a
+    ``run_id``, so two drivers racing on the same snapshot at worst
+    double-mark a bucket 'done' with identical counts — the max per bucket
+    is exact under that race (the writes themselves are idempotent dynamic
+    partition overwrites)."""
     run_id = run_id or uuid.uuid4().hex
-    src = with_part_hash(transcripts, n_buckets)
+    flags = {
+        "spans": spans,
+        "translate": translate,
+        "curate": curate,
+        "line_dedup": line_dedup,
+        "conv_curate": conv_curate,
+        "quarantine": quarantine,
+        "dedup": dedup,
+        "near_dup": near_dup,
+    }
+    unknown = [st.flag for st in STAGES if st.flag not in flags]
+    if unknown:
+        raise ValueError(f"stage table names unknown flags {unknown}")
+    opts = {
+        "curate_max_dup_bigram": curate_max_dup_bigram,
+        "curate_min_tokens": curate_min_tokens,
+        "conv_min_turns": conv_min_turns,
+        "conv_max_repeat": conv_max_repeat,
+        "line_dedup_min_df": line_dedup_min_df,
+    }
 
-    if not (force or detect_changes):
-        done = done_buckets(spark, output_dir, snapshot_id)
-        if done is not None:
-            # broadcast anti-join: the done-set is ≤ n_buckets rows
-            src = src.join(F.broadcast(done), "part_hash", "left_anti")
+    src = with_part_hash(transcripts, n_buckets)
+    state = _lineage_state(spark, output_dir, snapshot_id)
+    # turn count per bucket this snapshot has completed
+    done_tc = {
+        b: r["snap_tc"] for b, r in state.items() if r["snap_tc"] is not None
+    }
+    if done_tc and not (force or detect_changes):
+        src = src.filter(~F.col("part_hash").isin(sorted(done_tc)))
     # The bucket set THIS run processes is the key set of the one column-
     # pruned input aggregation (≤ n_buckets rows).  It scopes the
     # committed-turns re-read below: if the output dir is reused across
@@ -291,452 +651,71 @@ def run_with_resume(
     bucket_sigs = _bucket_sigs(src)
     run_buckets = sorted(bucket_sigs)
     if detect_changes and not force:
-        stored: dict[int, int] = {}
-        lin0 = read_lineage(spark, output_dir)
-        if lin0 is not None and "bucket_sig" in lin0.columns:
-            for r in (
-                lin0.filter(
-                    (F.col("status") == "done")
-                    & F.col("bucket_sig").isNotNull()
-                    & F.col("ts").isNotNull()
-                )
-                .groupBy("part_hash")
-                .agg(F.max_by("bucket_sig", "ts").alias("sig"))
-                .collect()
-            ):
-                stored[int(r["part_hash"])] = int(r["sig"])
+        stored = {b: r["sig"] for b, r in state.items()}
         unchanged = [b for b in run_buckets if stored.get(b) == bucket_sigs[b]]
         if unchanged:
             src = src.filter(~F.col("part_hash").isin(unchanged))
             run_buckets = sorted(set(run_buckets) - set(unchanged))
 
     turns_out = os.path.join(output_dir, "turns")
+    docs_out = os.path.join(output_dir, "docs")
     if run_buckets:
-        # recompute the hash on the output rows directly (no join needed
-        # — part_hash is a pure function of conv_id).  Idempotent resume
-        # REQUIRES dynamic partition overwrite (the static default wipes
-        # previously committed buckets); set it per-write so the shared
-        # session's conf is never mutated.
-        turns = pipeline.extract_turns(src.select("conv_id", "turn_idx", "text"))
-        turns = with_part_hash(turns, n_buckets)
-        (
-            turns.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("part_hash")
-            .parquet(turns_out)
+        turns = pipeline.extract_turns(
+            src.select("conv_id", "turn_idx", "text")
         )
+        _write_buckets(with_part_hash(turns, n_buckets), turns_out)
     elif not os.path.exists(turns_out):
         # nothing to process and nothing committed before (empty input):
         # there is no table to read back — return zeros, don't raise
         return {"buckets_processed": 0, "turns_total": 0}
 
     # Downstream stages read the committed parquet back (scan, not
-    # recompute), restricted to this run's buckets: a conversation never
-    # straddles buckets, so each processed bucket is doc-complete.
+    # recompute), restricted to the buckets they need: a conversation
+    # never straddles buckets, so each processed bucket is doc-complete.
     committed = spark.read.parquet(turns_out)
-    new_turns = (
-        committed.filter(F.col("part_hash").isin(run_buckets))
-        if run_buckets
-        else committed.filter(F.lit(False))
-    )
-
+    new_turns = committed.filter(F.col("part_hash").isin(run_buckets))
     if run_buckets:
-        docs = with_part_hash(pipeline.extract_docs(new_turns), n_buckets)
-        docs_out = os.path.join(output_dir, "docs")
-        (
-            docs.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("part_hash")
-            .parquet(docs_out)
-        )
+        docs = pipeline.extract_docs(new_turns)
+        _write_buckets(with_part_hash(docs, n_buckets), docs_out)
 
-    if spans:
-        # Span table under the same lineage/resume mechanism.  Coverage
-        # is driven by the COMMITTED turns table, not this run's delta:
-        # a completed extraction re-run with spans=True must backfill
-        # spans for already-done buckets (which new_turns excludes).
-        spans_out = os.path.join(output_dir, "spans")
-        need = _stage_coverage(spans_out, turns_out, run_buckets)
-        if need:
-            sp = with_part_hash(
-                pipeline.extract_spans(
-                    committed.filter(F.col("part_hash").isin(need))
-                ),
-                n_buckets,
-            )
-            (
-                sp.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("part_hash")
-                .parquet(spans_out)
-            )
-
-    if translate:
-        # translated documents (T1 + P4 over the translated pages,
-        # mistralocr_app.py:717) under the same backfill-aware coverage
-        # rule as spans: derived from the COMMITTED turns, per bucket
-        from engine.spark import translate as tmod
-
-        tr_out = os.path.join(output_dir, "docs_translated")
-        need = _stage_coverage(tr_out, turns_out, run_buckets)
-        if need:
-            tr = tmod.translate_turns(
-                committed.filter(F.col("part_hash").isin(need))
-            )
-            td = with_part_hash(tmod.translated_docs(tr), n_buckets)
-            (
-                td.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("part_hash")
-                .parquet(tr_out)
-            )
-
-    if curate:
-        # Per-conversation curation metrics table (round-4 quality ops:
-        # repetition stats + PII counts over the assembled documents)
-        # under the same backfill-aware coverage rule as spans — the
-        # scores a 10^12-turn corpus filter/monitor job reads instead of
-        # re-scanning text.  Derived from the committed docs table, so
-        # it is incremental per bucket and a completed run re-executed
-        # with curate=True backfills every bucket.
-        from engine.spark import text as etext
-
-        cur_out = os.path.join(output_dir, "curation")
-        docs_out_path = os.path.join(output_dir, "docs")
-        need = _stage_coverage(cur_out, turns_out, run_buckets)
-        if need and not os.path.exists(docs_out_path):
+    committed_buckets = _partition_buckets(turns_out)
+    sources = {
+        "turns": lambda: committed,
+        "docs": lambda: spark.read.parquet(docs_out),
+        "input": lambda: with_part_hash(transcripts, n_buckets),
+    }
+    for st in STAGES:
+        if not flags[st.flag]:
+            continue
+        out = os.path.join(output_dir, st.out)
+        need = _stage_coverage(out, committed_buckets, run_buckets)
+        if need and "docs" in st.sources and not os.path.exists(docs_out):
+            # a silent no-op here would let a global table be published
+            # from a stale/partial stage table — fail loudly instead (the
+            # docs table is written by every normal run; its absence
+            # means a corrupted output dir)
             raise RuntimeError(
-                f"curate stage needs metrics for buckets {sorted(need)[:8]}"
-                f"{'…' if len(need) > 8 else ''} but {docs_out_path} is "
-                "missing; re-run extraction first"
+                f"{st.flag} stage needs {st.out} for buckets {need[:8]}"
+                f"{'…' if len(need) > 8 else ''} but {docs_out} is missing; "
+                f"refusing to publish {st.publish or st.out} from a stale "
+                "table (re-run extraction or pass force=True)"
             )
-        if need:
-            d = spark.read.parquet(docs_out_path).filter(
-                F.col("part_hash").isin(need)
-            )
-            # Metrics over CONTENT, not assembly artifacts: the inserted
-            # OCR stub blocks, image embeds and rewritten link targets
-            # carry conv-id digit runs and repeated boilerplate that
-            # would pollute both the repetition ratios and the PII
-            # regex counts (an 8-digit conv id segment matches the
-            # conservative phone pattern) — same normalization rationale
-            # as the near-dup stage's signature input below.
-            content = F.regexp_replace(
-                F.regexp_replace(
-                    F.regexp_replace(
-                        F.col("markdown"),
-                        r"(?s)> 📄 Image OCR Result:\n\n```json\n.*?\n```",
-                        "",
-                    ),
-                    r"!\[[^\]]*\]\([^)]*\)",
-                    "",
-                ),
-                r"\]\([^)]*\)",
-                "]()",
-            )
-            docs_for = d.select(
-                F.col("conv_id").alias("doc_id"),
-                content.alias("text"),
-            )
-            rep = etext.repetition_stats(docs_for)
-            # LEFT join from the PII side: pii_scrub is a projection
-            # (exactly one row per conversation), while repetition_stats
-            # yields no row for a conv whose normalized content is empty
-            # (e.g. all OCR stubs) — an inner join would silently drop
-            # those convs from the curation table AND leave their bucket
-            # partition unwritten, so _stage_coverage would re-queue it
-            # forever.  Empty-content convs keep a row with n_tokens=0
-            # and NULL ratios.
-            pii = etext.pii_scrub(docs_for).drop("clean_text")
-            # the quality gate (same semantics as the corpus_curation
-            # contract query: NULL metrics fail the gate).  Thresholds
-            # are evaluated at WRITE time and stored alongside the raw
-            # metrics, so a consumer can always re-derive `keep` with
-            # different cutoffs from the same table without re-scanning
-            # text; dedup keep-lists are the --dedup stage's job, not
-            # curation's.
-            kept = F.coalesce(
-                F.col("dup_bigram_ratio") <= curate_max_dup_bigram,
-                F.lit(False),
-            ) & F.coalesce(
-                F.col("n_tokens") >= curate_min_tokens, F.lit(False)
-            )
-            cur = pii.join(rep, "doc_id", "left").select(
-                F.col("doc_id").alias("conv_id"),
-                F.coalesce("n_tokens", F.lit(0)).cast("long").alias(
-                    "n_tokens"
-                ),
-                F.coalesce("n_distinct", F.lit(0)).cast("long").alias(
-                    "n_distinct"
-                ),
-                "distinct_ratio",
-                "top_share",
-                "dup_bigram_ratio",
-                "n_emails",
-                "n_ips",
-                "n_phones",
-                kept.alias("keep"),
-            )
-            (
-                with_part_hash(cur, n_buckets)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("part_hash")
-                .parquet(cur_out)
-            )
-
-    if line_dedup:
-        # Cross-document line dedup under lineage, split at the same
-        # seam as --dedup: (1) per-bucket line-fingerprint DOC-counts —
-        # the pass that touches document text — incremental +
-        # backfill-aware; (2) the global boilerplate-line table — a sum
-        # over the compact counts table only (8-byte keys + counts,
-        # never text) — wholesale-overwritten, cheap to recompute.  A
-        # consumer strips boilerplate by anti-joining exploded doc
-        # lines against boilerplate_lines on the fingerprint; the
-        # threshold is evaluated at READ time of the counts, so
-        # re-publishing with a different min_df needs no text re-scan.
-        # Summing per-bucket DISTINCT-conv counts is exact because a
-        # conversation never spans buckets (part_hash is a function of
-        # conv_id), so no conv is double-counted across bucket rows.
-        from engine.spark.dedup import portable_hash60
-
-        lc_out = os.path.join(output_dir, "line_counts")
-        docs_out_path = os.path.join(output_dir, "docs")
-        need = _stage_coverage(lc_out, turns_out, run_buckets)
-        if need and not os.path.exists(docs_out_path):
-            raise RuntimeError(
-                f"line-dedup stage needs counts for buckets "
-                f"{sorted(need)[:8]}{'…' if len(need) > 8 else ''} but "
-                f"{docs_out_path} is missing; re-run extraction first"
-            )
-        if need:
-            d = spark.read.parquet(docs_out_path).filter(
-                F.col("part_hash").isin(need)
-            )
-            # same id-blank normalization as --dedup: assembled markdown
-            # embeds conv_id in link paths/OCR stubs, which would make
-            # every such line unique per conversation and invisible to
-            # the cross-document frequency count
-            content = F.expr("replace(markdown, conv_id, '<conv>')")
-            lines = d.select(
-                "conv_id",
-                "part_hash",
-                F.explode(F.split(content, "\n")).alias("line"),
-            )
-            counts = (
-                lines.groupBy(
-                    "part_hash", portable_hash60(F.col("line")).alias("lfp")
-                )
-                .agg(F.countDistinct("conv_id").alias("n_docs"))
-            )
-            (
-                counts.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("part_hash")
-                .parquet(lc_out)
-            )
-        if os.path.exists(lc_out):
-            _missing = _partition_buckets(turns_out) - _partition_buckets(
-                lc_out
-            )
-            if _missing:
-                raise RuntimeError(
-                    "line-dedup counts are stale for buckets "
-                    f"{sorted(_missing)[:8]}; refusing to publish "
-                    "boilerplate_lines from a partial counts table"
-                )
-            bl = (
-                spark.read.parquet(lc_out)
-                .groupBy("lfp")
-                .agg(F.sum("n_docs").alias("line_df"))
-                .where(F.col("line_df") >= line_dedup_min_df)
-            )
-            bl.write.mode("overwrite").parquet(
-                os.path.join(output_dir, "boilerplate_lines")
-            )
-
-    if conv_curate:
-        # Conversation-level curation (transcript_curation): run-collapse
-        # repeat ratio, alternation violations and the SFT-usability
-        # gate, per bucket under the shared backfill rule.  Computed
-        # from the ORIGINAL transcripts (role/text never reach the
-        # committed turns table — the parse stage prunes them), and
-        # conversations never split across buckets (part_hash is a
-        # function of conv_id), so the metrics are bucket-local.
-        from engine.spark import conversation
-
-        cc_out = os.path.join(output_dir, "conv_curation")
-        need = _stage_coverage(cc_out, turns_out, run_buckets)
-        if need:
-            all_src = with_part_hash(transcripts, n_buckets)
-            cc = conversation.transcript_curation(
-                all_src.filter(F.col("part_hash").isin(need)).select(
-                    "conv_id", "turn_idx", "role", "text"
-                ),
-                min_turns=conv_min_turns,
-                max_repeat_ratio=conv_max_repeat,
-            )
-            (
-                with_part_hash(cc, n_buckets)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("part_hash")
-                .parquet(cc_out)
-            )
-
-    if quarantine:
-        # diverted-rows table (error channel, pipeline.quarantine) under
-        # the same backfill-aware coverage rule.  The committed turns say
-        # WHICH rows (empty markdown), the ORIGINAL payloads say WHY —
-        # the committed turns don't carry text, but the input covers done
-        # buckets too — so no payload is parsed a second time
-        q_out = os.path.join(output_dir, "quarantine")
-        need = _stage_coverage(q_out, turns_out, run_buckets)
         if need:
             in_need = F.col("part_hash").isin(need)
-            qr = with_part_hash(
-                quarantine_from_turns(
-                    with_part_hash(transcripts, n_buckets).filter(in_need),
-                    committed.filter(in_need),
-                ),
-                n_buckets,
+            frames = [sources[s]().filter(in_need) for s in st.sources]
+            built = _call(st.build, frames, opts)
+            if "part_hash" not in built.columns:
+                built = with_part_hash(built, n_buckets)
+            _write_buckets(built, out)
+        if st.publish and os.path.exists(out):
+            stale = sorted(committed_buckets - _partition_buckets(out))
+            table = _call(
+                st.publish_build,
+                [spark.read.parquet(out)],
+                {**opts, "stale_buckets": stale},
             )
-            (
-                qr.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("part_hash")
-                .parquet(q_out)
-            )
-
-    if dedup:
-        # Two-phase dedup under lineage: (1) per-bucket document
-        # fingerprints — the expensive pass — are incremental and
-        # backfill-aware exactly like spans; (2) exact-dup clusters are
-        # a GLOBAL reduction, but over the compact fingerprint table
-        # (one row per conversation, not per turn), so rewriting them
-        # every run costs one small groupBy, never a corpus re-scan.
-        from engine.spark.text import fingerprint as fp_col
-
-        fp_out = os.path.join(output_dir, "fingerprints")
-        docs_out_path = os.path.join(output_dir, "docs")
-        need = _stage_coverage(fp_out, turns_out, run_buckets)
-        if need and not os.path.exists(docs_out_path):
-            # a silent no-op here would let the global cluster rewrite
-            # below publish clusters from a stale/partial fingerprint
-            # table — fail loudly instead (the docs table is written by
-            # every normal run; its absence means a corrupted output dir)
-            raise RuntimeError(
-                f"dedup stage needs fingerprints for buckets {sorted(need)[:8]}"
-                f"{'…' if len(need) > 8 else ''} but {docs_out_path} is "
-                "missing; refusing to publish dup_clusters from a stale "
-                "fingerprint table (re-run extraction or pass force=True)"
-            )
-        if need:
-            d = spark.read.parquet(docs_out_path).filter(
-                F.col("part_hash").isin(need)
-            )
-            # id-normalized content fingerprint: the assembled markdown
-            # embeds conv_id (image link paths, OCR stubs), so a
-            # re-ingested conversation under a NEW id would never match
-            # its twin — blank the id out before hashing
-            content = F.expr("replace(markdown, conv_id, '<conv>')")
-            fps = d.select(
-                "conv_id",
-                fp_col(content).alias("fp"),
-                F.length("markdown").alias("n_chars"),
-                "part_hash",
-            )
-            (
-                fps.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("part_hash")
-                .parquet(fp_out)
-            )
-        if os.path.exists(fp_out):
-            clusters = (
-                spark.read.parquet(fp_out)
-                .groupBy("fp")
-                .agg(
-                    F.min("conv_id").alias("keep_conv_id"),
-                    F.count("*").alias("n_members"),
-                )
-                .where(F.col("n_members") >= 2)
-            )
-            clusters.write.mode("overwrite").parquet(
-                os.path.join(output_dir, "dup_clusters")
-            )
-
-    if near_dup:
-        # Near-dup clustering under lineage, split at the right seam:
-        # (1) MinHash signatures — the pass that touches document text —
-        # are per-bucket incremental + backfill-aware; (2) pair
-        # generation + connected components run globally, but over the
-        # compact signature table (one 32-long array per conversation),
-        # a banded equi-join + O(log n) star rounds — never a corpus
-        # re-scan or an all-pairs product.
-        from engine.spark import dedup as dmod
-
-        sig_out = os.path.join(output_dir, "signatures")
-        docs_out_path = os.path.join(output_dir, "docs")
-        need = _stage_coverage(sig_out, turns_out, run_buckets)
-        if need and not os.path.exists(docs_out_path):
-            # same stale-publish hazard as the dedup stage above
-            raise RuntimeError(
-                f"near-dup stage needs signatures for buckets "
-                f"{sorted(need)[:8]}{'…' if len(need) > 8 else ''} but "
-                f"{docs_out_path} is missing; refusing to publish "
-                "near_dup_clusters from a stale signature table"
-            )
-        if need:
-            d = spark.read.parquet(docs_out_path).filter(
-                F.col("part_hash").isin(need)
-            )
-            # hash CONTENT, not assembly artifacts: the OCR-stub blocks
-            # and image links the pipeline inserts are near-identical
-            # across conversations once the id is normalized out, so
-            # leaving them in makes image-heavy documents look like
-            # near-dups of each other regardless of their actual text
-            content = F.regexp_replace(
-                F.regexp_replace(
-                    F.col("markdown"),
-                    r"(?s)> 📄 Image OCR Result:\n\n```json\n.*?\n```",
-                    "",
-                ),
-                r"!\[[^\]]*\]\([^)]*\)",
-                "",
-            )
-            sigs = dmod.minhash_signatures(
-                d.select(
-                    F.col("conv_id").alias("doc_id"),
-                    content.alias("text"),
-                ),
-                num_perm=32,
-            )
-            sigs = with_part_hash(
-                sigs.select(F.col("doc_id").alias("conv_id"), "sig"),
-                n_buckets,
-            )
-            (
-                sigs.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("part_hash")
-                .parquet(sig_out)
-            )
-        if os.path.exists(sig_out):
-            all_sigs = spark.read.parquet(sig_out).select(
-                F.col("conv_id").alias("doc_id"), "sig"
-            )
-            pairs = dmod.minhash_pairs_from_signatures(
-                all_sigs, num_perm=32, bands=16, min_jaccard=0.8
-            )
-            cc = dmod.connected_components(pairs)
-            (
-                cc.selectExpr(
-                    "doc_id AS conv_id", "cluster_id AS cluster_conv_id"
-                )
-                .write.mode("overwrite")
-                .parquet(os.path.join(output_dir, "near_dup_clusters"))
+            table.write.mode("overwrite").parquet(
+                os.path.join(output_dir, st.publish)
             )
 
     # lineage rows for the buckets processed in this run, counted over
@@ -770,8 +749,7 @@ def run_with_resume(
         }
         for m in metrics
     ]
-    n_new = len(rows)
-    if n_new:
+    if rows:
         schema = (
             "input_snapshot_id string, run_id string, part_hash int, "
             "turn_count long, conv_count long, image_count long, "
@@ -784,44 +762,22 @@ def run_with_resume(
             pd.DataFrame(rows, columns=LINEAGE_COLS), schema=schema
         ).coalesce(1).write.mode("append").parquet(_lineage_path(output_dir))
 
-    # total turns from lineage rows (every done bucket of this snapshot
-    # has one), NOT a full scan of the committed turns table — at 10^12
-    # turns that recount is itself a job.  max(turn_count) per bucket is
-    # exact even when concurrent runs double-marked a bucket.
-    lin = read_lineage(spark, output_dir)
-    if lin is None:
-        # fresh run over an empty input: nothing written, nothing done
-        return {"buckets_processed": 0, "turns_total": 0}
+    # total turns from the lineage state plus this run's rows (every done
+    # bucket has one), NOT a scan of the committed turns table — at 10^12
+    # turns that recount is itself a job.
+    new_tc = {r["part_hash"]: r["turn_count"] for r in rows}
     if detect_changes:
-        if not bucket_sigs:
-            return {"buckets_processed": n_new, "turns_total": 0}
         # content-addressed mode: the live total is the LATEST completed
-        # count per bucket, over the buckets present in this input
-        n_turns = (
-            lin.filter(
-                (F.col("status") == "done")
-                & F.col("ts").isNotNull()
-                & F.col("part_hash").isin(sorted(bucket_sigs))
-            )
-            .groupBy("part_hash")
-            .agg(F.max_by("turn_count", "ts").alias("tc"))
-            .agg(F.sum("tc"))
-            .collect()[0][0]
-            or 0
+        # count per bucket (this run's rows are the latest), over the
+        # buckets present in this input
+        latest = {b: r["turn_count"] for b, r in state.items()} | new_tc
+        n_turns = sum(latest.get(b) or 0 for b in bucket_sigs)
+    else:
+        n_turns = sum(
+            max(done_tc.get(b, 0), new_tc.get(b, 0))
+            for b in done_tc.keys() | new_tc.keys()
         )
-        return {"buckets_processed": n_new, "turns_total": int(n_turns)}
-    n_turns = (
-        lin.filter(
-            (F.col("status") == "done")
-            & (F.col("input_snapshot_id") == snapshot_id)
-        )
-        .groupBy("part_hash")
-        .agg(F.max("turn_count").alias("tc"))
-        .agg(F.sum("tc"))
-        .collect()[0][0]
-        or 0
-    )
-    return {"buckets_processed": n_new, "turns_total": int(n_turns)}
+    return {"buckets_processed": len(rows), "turns_total": n_turns}
 
 
 def lineage_summary(spark: SparkSession, output_dir: str) -> DataFrame:

@@ -331,7 +331,7 @@ def test_mad_flags_hand_computed(spark):
         [("k", float(v), i) for i, v in enumerate(vals)],
         "k: string, v: double, id: long",
     )
-    row = diagnose.mad_flags(df, "k", "v", "id").collect()[0]
+    row = diagnose.mad_flags(df, "k", "v").collect()[0]
     # sorted: 1..9,1000; n=10 -> median = (5+6)/2 = 5.5
     assert row.median == 5.5
     # deviations: 4.5,3.5,2.5,1.5,0.5,0.5,1.5,2.5,3.5,994.5

@@ -732,6 +732,173 @@ def test_lineage_one_file_per_run(spark, transcripts_path, tmp_path):
         assert n_files() == i
 
 
+def _table_rows(spark, path, drop=()):
+    df = spark.read.parquet(path).drop(*drop)
+    return sorted(repr(tuple(r)) for r in df.collect())
+
+
+def test_read_lineage_once_per_job(spark, transcripts_path, tmp_path,
+                                   monkeypatch):
+    """Every resume mode reads the lineage table at most once: the state
+    at job start decides the skipped buckets and, with this run's rows,
+    the turn total."""
+    out = str(tmp_path / "out")
+    df = spark.read.parquet(transcripts_path)
+    real = lineage.read_lineage
+    calls = []
+
+    def counting(*a, **k):
+        calls.append(1)
+        return real(*a, **k)
+
+    monkeypatch.setattr(lineage, "read_lineage", counting)
+    edited = lineage.with_part_hash(df, 8).withColumn(
+        "text",
+        F.when(F.col("part_hash") == 0, F.concat("text", F.lit(" edit")))
+        .otherwise(F.col("text")),
+    ).drop("part_hash")
+    n = df.count()
+    for kw, processed in (
+        (dict(), 8),                                   # fresh
+        (dict(), 0),                                   # no-op resume
+        (dict(force=True), 8),                         # force
+        (dict(detect_changes=True, snapshot_id="e"), 1),  # one-bucket edit
+    ):
+        calls.clear()
+        src = edited if kw.get("detect_changes") else df
+        r = lineage.run_with_resume(
+            spark, src, out, **{"snapshot_id": "s", "n_buckets": 8, **kw}
+        )
+        assert r == {"buckets_processed": processed, "turns_total": n}
+        assert len(calls) <= 1, kw
+
+
+def test_force_subset_keeps_snapshot_total(spark, transcripts_path, tmp_path):
+    """A forced re-run over half the input under the same snapshot still
+    reports every bucket the snapshot has completed."""
+    out = str(tmp_path / "out")
+    df = spark.read.parquet(transcripts_path)
+    full = lineage.run_with_resume(spark, df, out, snapshot_id="s", n_buckets=8)
+    half = lineage.with_part_hash(df, 8).filter("part_hash < 4").drop("part_hash")
+    r = lineage.run_with_resume(spark, half, out, snapshot_id="s", n_buckets=8,
+                                force=True)
+    assert 0 < r["buckets_processed"] < full["buckets_processed"]
+    assert r["turns_total"] == full["turns_total"] == df.count()
+
+
+def test_unknown_stage_flag_raises(spark, transcripts_path, tmp_path,
+                                   monkeypatch):
+    """A stage whose flag is not a run_with_resume keyword is refused
+    before anything is written."""
+    bogus = lineage.Stage("bogus", "bogus", ("turns",), lambda t: t)
+    monkeypatch.setattr(lineage, "STAGES", lineage.STAGES + (bogus,))
+    out = str(tmp_path / "out")
+    with pytest.raises(ValueError, match="bogus"):
+        lineage.run_with_resume(
+            spark, spark.read.parquet(transcripts_path), out, snapshot_id="s",
+            n_buckets=8,
+        )
+    assert not os.path.exists(out)
+
+
+def test_lineage_files_without_sig_or_ts(spark, transcripts_path, tmp_path):
+    """Lineage files written before bucket_sig/ts existed still mark their
+    buckets done for their snapshot, and never count as the latest run of
+    a bucket for detect_changes."""
+    out = str(tmp_path / "out")
+    df = spark.read.parquet(transcripts_path)
+    r1 = lineage.run_with_resume(spark, df, out, snapshot_id="s", n_buckets=8)
+    lin = os.path.join(out, "_lineage")
+    old = lineage.read_lineage(spark, out).toPandas()
+    for f in os.listdir(lin):
+        os.remove(os.path.join(lin, f))
+    old.drop(columns=["bucket_sig", "ts"]).to_parquet(
+        os.path.join(lin, "old.parquet"), index=False
+    )
+    assert "bucket_sig" not in lineage.read_lineage(spark, out).columns
+    assert lineage.run_with_resume(spark, df, out, snapshot_id="s",
+                                   n_buckets=8) == {
+        "buckets_processed": 0, "turns_total": r1["turns_total"]}
+    r = lineage.run_with_resume(spark, df, out, snapshot_id="t", n_buckets=8,
+                                detect_changes=True)
+    assert r == {"buckets_processed": 8, "turns_total": r1["turns_total"]}
+    merged = lineage.read_lineage(spark, out)
+    assert merged.filter(F.col("bucket_sig").isNull()).count() == 8
+
+
+def test_read_lineage_without_files(spark, tmp_path):
+    """An output dir whose _lineage holds no parquet file has no lineage."""
+    out = str(tmp_path / "out")
+    assert lineage.read_lineage(spark, out) is None
+    os.makedirs(os.path.join(out, "_lineage"))
+    open(os.path.join(out, "_lineage", "_SUCCESS"), "w").close()
+    assert lineage.read_lineage(spark, out) is None
+
+
+@pytest.mark.parametrize("crash_in", ["extract_docs", "extract_spans"])
+def test_crash_then_rerun_equals_clean_run(spark, transcripts_path, tmp_path,
+                                           monkeypatch, crash_in):
+    """A job that dies after committing turns (and docs) but before its
+    lineage append, re-run with the same arguments, leaves the same
+    tables, result and lineage rows as one clean run."""
+    df = spark.read.parquet(transcripts_path)
+    kw = dict(snapshot_id="s", n_buckets=8, spans=True, quarantine=True)
+    clean, crashed = str(tmp_path / "clean"), str(tmp_path / "crashed")
+    want = lineage.run_with_resume(spark, df, clean, **kw)
+
+    real = getattr(pipeline, crash_in)
+    calls = []
+
+    def crash_once(*a, **k):
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("injected crash")
+        return real(*a, **k)
+
+    monkeypatch.setattr(pipeline, crash_in, crash_once)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        lineage.run_with_resume(spark, df, crashed, **kw)
+    assert os.path.isdir(os.path.join(crashed, "turns"))
+    assert lineage.read_lineage(spark, crashed) is None
+
+    assert lineage.run_with_resume(spark, df, crashed, **kw) == want
+    for table in ("turns", "docs", "spans", "quarantine"):
+        assert _table_rows(spark, os.path.join(crashed, table)) == _table_rows(
+            spark, os.path.join(clean, table)
+        ), table
+    lin = [os.path.join(d, "_lineage") for d in (crashed, clean)]
+    got, ref = (_table_rows(spark, p, drop=("run_id", "ts")) for p in lin)
+    assert got == ref and len(got) == want["buckets_processed"] == 8
+
+
+def test_doc_content_strips_what_the_literal_stripped(spark):
+    """The OCR-block pattern built from spec.OCR_BLOCK_PREFIX/SUFFIX
+    strips exactly what the hard-coded literal it replaced stripped."""
+    literal = r"(?s)> 📄 Image OCR Result:\n\n```json\n.*?\n```"
+    embed = r"!\[[^\]]*\]\([^)]*\)"
+    blocks = [
+        spec.ocr_block("img-1", spec.ocr_json_text("c1", 0, "img-1")),
+        spec.ocr_block("img-2", '{\n  "a": "``` inside"\n}'),
+        spec.ocr_block("x.png", ""),
+    ]
+    texts = [
+        "before" + blocks[0] + "\nafter",
+        blocks[0] + blocks[1] + "\n\ntail " + blocks[2],
+        "no block here ![alt](p.png) > 📄 Image OCR Result: unfenced",
+        "",
+    ]
+    df = spark.createDataFrame([(t,) for t in texts], "md string")
+    rows = df.select(
+        lineage.doc_content(F.col("md")).alias("got"),
+        F.regexp_replace(
+            F.regexp_replace("md", literal, ""), embed, ""
+        ).alias("want"),
+    ).collect()
+    assert [r["got"] for r in rows] == [r["want"] for r in rows]
+    assert "Image OCR Result" not in rows[0]["got"]
+    assert rows[0]["got"].startswith("before") and rows[0]["got"].endswith("after")
+
+
 @pytest.mark.parametrize("depth", [500, 1_000, 100_000])
 def test_deep_json_nesting(spark, depth):
     """Tool JSON nested deeper than spec.JSON_MAX_DEPTH gets the
