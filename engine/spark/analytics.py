@@ -1484,11 +1484,13 @@ def degree_stats(
     counts exact BIGINTs; means are single correctly-rounded
     divisions.  Output: (n_nodes, n_edges, max_out, max_in,
     avg_degree, reciprocity) — value-identical to the
-    distinct-then-five-legs formulation (the oracle twin).
+    distinct-then-five-legs formulation (the oracle twin).  An edge
+    with a NULL endpoint is dropped: ``least``/``greatest`` skip NULLs,
+    so it would otherwise count as a self-loop on its other endpoint.
     """
     s = F.col(src_col).cast("long")
     d = F.col(dst_col).cast("long")
-    pairs = edges.select(
+    pairs = edges.where(s.isNotNull() & d.isNotNull()).select(
         F.least(s, d).alias("lo"),
         F.greatest(s, d).alias("hi"),
         (s <= d).alias("f"),   # edge lo→hi present (self-loops: both)

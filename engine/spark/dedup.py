@@ -8,10 +8,9 @@ Every operator here is verified value-exact against a DuckDB oracle
 (__spark_entry__.oracle_sql): the shingle/token hash is *portable* —
 the first 15 hex chars of md5 parsed as a 60-bit integer — which both
 engines compute identically (Spark ``conv(substring(md5(x),1,15),16,10)``,
-DuckDB ``('0x' || substr(md5(x),1,15))::BIGINT``).  md5 is slower than
-xxhash64 JVM-side; pass ``fast_hash=True`` on a production cluster where
-cross-engine verifiability isn't needed — the candidate structure is
-identical, only bucket assignments differ.
+DuckDB ``('0x' || substr(md5(x),1,15))::BIGINT``).  It is the only
+hash path, so every signature, bucket and candidate pair here has a
+value-exact DuckDB twin.
 
 Scale notes (100 TB):
   * candidate generation is always a banded/bucketed equi-join;
@@ -37,12 +36,6 @@ def portable_hash60(col: Column) -> Column:
     """60-bit non-negative hash both Spark and DuckDB can compute
     byte-identically: int(md5(x)[:15], 16)."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-def _hash_col(col: Column, fast_hash: bool) -> Column:
-    # xxhash64 (JVM murmur-family, fastest) has no DuckDB twin; the
-    # portable md5 prefix is the verifiable default.
-    return F.xxhash64(col) if fast_hash else portable_hash60(col)
 
 
 # ----------------------------------------------------------------- exact
@@ -156,7 +149,6 @@ def minhash_signatures(
     num_perm: int = 32,
     n: int = 3,
     text_col: str = "text",
-    fast_hash: bool = False,
 ) -> DataFrame:
     """(doc_id, sig: array<bigint>) via k universal-hash permutations
     h_i(x) = ((2i+1) * x + b_i) mod p over 31-bit shingle codes.
@@ -174,7 +166,7 @@ def minhash_signatures(
     # degenerate arithmetic, which is why value-equality never caught
     # it — a two-engine oracle checks portability, not theory.)
     sh = word_shingles(docs, n, text_col).withColumn(
-        "code", F.pmod(_hash_col(F.col("shingle"), fast_hash), F.lit(2147483647))
+        "code", F.pmod(portable_hash60(F.col("shingle")), F.lit(2147483647))
     )
     perms = F.transform(
         F.sequence(F.lit(0), F.lit(num_perm - 1)),
@@ -247,12 +239,11 @@ def minhash_lsh_pairs(
     bands: int = 8,
     n: int = 3,
     text_col: str = "text",
-    fast_hash: bool = False,
 ) -> DataFrame:
     """Banded LSH: band-signature equi-join finds candidates, estimated
     Jaccard = fraction of matching minhashes.  The band bucket key is
     md5 of the band's minhash slice (portable across engines)."""
-    sig = minhash_signatures(docs, num_perm, n, text_col, fast_hash)
+    sig = minhash_signatures(docs, num_perm, n, text_col)
     return minhash_pairs_from_signatures(sig, num_perm, bands)
 
 
@@ -301,7 +292,6 @@ def minhash_incremental_pairs(
     bands: int = 8,
     n: int = 3,
     text_col: str = "text",
-    fast_hash: bool = False,
     broadcast_new: bool = True,
 ) -> DataFrame:
     """Daily-ingest dedup: candidate pairs touching the NEW batch only —
@@ -333,11 +323,11 @@ def minhash_incremental_pairs(
     and pair_type ∈ {'new_new', 'new_corpus'}."""
     rows = num_perm // bands
     b_new = _band_explode(
-        minhash_signatures(new_docs, num_perm, n, text_col, fast_hash),
+        minhash_signatures(new_docs, num_perm, n, text_col),
         bands, rows,
     )
     b_old = _band_explode(
-        minhash_signatures(corpus_docs, num_perm, n, text_col, fast_hash),
+        minhash_signatures(corpus_docs, num_perm, n, text_col),
         bands, rows,
     )
     a = b_new.alias("a")
@@ -396,20 +386,19 @@ def simhash(
     docs: DataFrame,
     bits: int = 60,
     text_col: str = "text",
-    fast_hash: bool = False,
 ) -> DataFrame:
     """SimHash over whitespace tokens, all JVM-side: explode tokens →
     portable hash → per-bit vote sums in a single groupBy (map-side
     combine) → sign bits reassembled with bitwise ors.
 
     Default 60 bits: the portable hash yields 60 usable bits (15 hex
-    chars); with ``fast_hash`` (xxhash64) up to 64 are available."""
+    chars)."""
     toks = docs.select(
         "doc_id",
         F.explode(
             F.split(F.trim(F.lower(F.col(text_col))), text.WS)
         ).alias("tok"),
-    ).withColumn("h", _hash_col(F.col("tok"), fast_hash))
+    ).withColumn("h", portable_hash60(F.col("tok")))
     votes = [
         F.sum(
             F.when(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1)
@@ -445,7 +434,6 @@ def simhash_pairs(
     max_hamming: int = 3,
     bits: int = 60,
     text_col: str = "text",
-    fast_hash: bool = False,
 ) -> DataFrame:
     """Near-dup candidate pairs by SimHash with *guaranteed* recall at
     the requested radius: blocking uses ``max_hamming + 1`` chunks, so by
@@ -457,7 +445,7 @@ def simhash_pairs(
     n_chunks = max_hamming + 1
     if n_chunks > bits:
         raise ValueError(f"max_hamming={max_hamming} needs more chunks than bits={bits}")
-    sh = simhash(docs, bits, text_col, fast_hash)
+    sh = simhash(docs, bits, text_col)
     chunk_cols = [
         F.shiftright("simhash", off).bitwiseAND(F.lit((1 << width) - 1))
         for off, width in _chunk_bounds(bits, n_chunks)
@@ -739,7 +727,6 @@ def substring_spans(
     docs: DataFrame,
     k: int = 50,
     text_col: str = "text",
-    fast_hash: bool = False,
 ) -> DataFrame:
     """Exact substring-level duplicate spans (Lee et al., "Deduplicating
     Training Data Makes Language Models Better"): every maximal token
@@ -776,8 +763,7 @@ def substring_spans(
     exact extent; spans shorter than k are below threshold by design;
     two distinct duplicated spans that overlap in a document merge into
     one (still entirely duplicated text).  Hash collisions (60-bit md5
-    prefix, or xxhash64 with ``fast_hash``) are the only false-positive
-    source, ~2⁻⁶⁰ per gram pair."""
+    prefix) are the only false-positive source, ~2⁻⁶⁰ per gram pair."""
     from pyspark.sql import Window
 
     tokd = docs.select(
@@ -791,9 +777,8 @@ def substring_spans(
     # lookups per gram position
     grams = F.transform(
         F.sequence(F.lit(0), F.size(toks) - k),
-        lambda i: _hash_col(
-            F.concat_ws(" ", *[F.get(toks, i + j) for j in range(k)]),
-            fast_hash,
+        lambda i: portable_hash60(
+            F.concat_ws(" ", *[F.get(toks, i + j) for j in range(k)])
         ),
     )
     pos_sh = tokd.select(
@@ -826,7 +811,6 @@ def band_table(
     bands: int = 8,
     n: int = 3,
     text_col: str = "text",
-    fast_hash: bool = False,
 ) -> DataFrame:
     """The persistable LSH band table — exactly the structure
     ``minhash_incremental_pairs`` derives on the fly from the corpus
@@ -837,7 +821,7 @@ def band_table(
     re-shingling."""
     rows = num_perm // bands
     return _band_explode(
-        minhash_signatures(docs, num_perm, n, text_col, fast_hash),
+        minhash_signatures(docs, num_perm, n, text_col),
         bands,
         rows,
     )

@@ -52,16 +52,6 @@ def get_spark(
     )
     for k, v in (extra or {}).items():
         b = b.config(k, v)
-    # experiment hook: SPARK_GRAFT_EXTRA_CONF='{"spark.x":"y",...}' lets
-    # the bench profiling harness A/B a conf (GC, Arrow batch size)
-    # across subprocess legs without editing this file per variant;
-    # applied last so it overrides both defaults and `extra`
-    env_extra = os.environ.get("SPARK_GRAFT_EXTRA_CONF")
-    if env_extra:
-        import json
-
-        for k, v in json.loads(env_extra).items():
-            b = b.config(k, str(v))
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

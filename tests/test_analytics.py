@@ -1575,6 +1575,18 @@ def test_degree_stats_self_loop(spark):
     assert r.reciprocity == 0.5
 
 
+def test_degree_stats_null_endpoints(spark):
+    """An edge with a NULL endpoint is no edge: it must not turn into a
+    self-loop on its other endpoint."""
+    edges = spark.createDataFrame(
+        [(1, None), (None, 2), (1, 2)], "src: long, dst: long"
+    )
+    r = analytics.degree_stats(edges).collect()[0]
+    assert (r.n_nodes, r.n_edges) == (2, 1)
+    assert r.max_out == 1 and r.max_in == 1
+    assert r.reciprocity == 0.0
+
+
 def test_conversion_latency_first_touch(spark):
     """Latency anchors at the FIRST from-event and takes the first
     to-event strictly after it; conversions before the anchor don't

@@ -84,3 +84,38 @@ def test_rows_only_queries(spark, name):
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     assert df.count() > 0
+
+
+def test_registry_keys_unique():
+    keys = [k for k, _, _ in entry_mod._REGISTRY]
+    assert len(keys) == len(set(keys))
+
+
+def test_oracle_sql_follows_queries_order():
+    assert list(ORACLES) == [k for k in QUERIES if k in ORACLES]
+
+
+def test_only_the_sketch_has_no_twin():
+    assert set(QUERIES) - set(ORACLES) == {"value_quantiles_approx"}
+
+
+def test_epoch_budget_twin_drops_zero_mass_source(spark, tmp_path):
+    """A targeted source whose every text is blank has zero token mass:
+    the engine drops it (mix.epoch_budget), and so must the twin rather
+    than emit NULL repeat factors from its integer division."""
+    docs = pd.DataFrame({
+        "doc_id": list(range(6)),
+        "text": ["alpha beta", "gamma delta eps", "zeta", "", "  ", "   "],
+        "source": ["src0", "src0", "src1", "src2", "src2", "src2"],
+    })
+    docs.to_parquet(tmp_path / "documents.parquet", index=False)
+    got = entry_mod.q_epoch_budget(spark, str(tmp_path)).toPandas()
+    with duckdb.connect() as con:
+        con.execute(
+            "CREATE VIEW documents AS SELECT * FROM "
+            f"read_parquet('{tmp_path}/documents.parquet')"
+        )
+        want = con.execute(ORACLES["epoch_budget"]).df()
+    assert set(got["source"]) == {"src0", "src1"}
+    assert sorted(got.columns) == sorted(want.columns)
+    assert _canon(got) == _canon(want)

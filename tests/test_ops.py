@@ -516,26 +516,6 @@ def test_deterministic_split_stable_and_partitioned(spark, docs):
     assert "Exchange" not in plan, plan
 
 
-@pytest.mark.parametrize("op", ["minhash", "simhash"])
-def test_fast_hash_path_finds_same_dups(spark, op):
-    """The production hash path (fast_hash=True → JVM xxhash64, no
-    DuckDB twin) must detect the same planted duplicates as the portable
-    oracle hash — signatures differ, the dup verdicts must not."""
-    d = _planted_docs(spark)
-    if op == "minhash":
-        pairs = dedup.minhash_lsh_pairs(
-            d, num_perm=32, bands=16, fast_hash=True
-        ).toPandas()
-        got = set(map(tuple, pairs[["doc_a", "doc_b"]].values))
-        assert (0, 1) in got          # exact dup always collides
-        assert pairs.set_index(["doc_a", "doc_b"]).loc[(0, 1), "est_jaccard"] == 1.0
-    else:
-        pairs = dedup.simhash_pairs(d, max_hamming=16, fast_hash=True).toPandas()
-        got = {(r.doc_a, r.doc_b): r.hamming for r in pairs.itertuples()}
-        assert got.get((0, 1)) == 0   # identical docs → identical simhash
-        assert (0, 2) in got          # near dup within radius
-
-
 def test_asof_join_bucketed_equals_single_window(spark):
     """Skew-hardened two-phase carry (default) must be byte-equal to the
     single-window path, including across bucket boundaries and on a hot

@@ -36,11 +36,18 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 def _no_keyed_exchange(plan: str) -> bool:
-    """True when the only exchanges are the entry layer's round-robin
-    redistribution of an under-partitioned single-file scan — the
-    operator itself still introduces no hash/range exchange."""
-    kinds = re.findall(r"Exchange (\w+)", plan)
-    return all(k == "RoundRobinPartitioning" for k in kinds)
+    """True when the plan has no exchange, or exactly one: the entry
+    layer's round-robin redistribution directly above an
+    under-partitioned single-file scan.  The operator itself introduces
+    no exchange of any kind."""
+    lines = plan.splitlines()
+    ex = [i for i, ln in enumerate(lines) if re.match(r"[\s:|+-]*\w*Exchange ", ln)]
+    if not ex:
+        return True
+    if len(ex) > 1 or "Exchange RoundRobinPartitioning" not in lines[ex[0]]:
+        return False
+    child = lines[ex[0] + 1] if ex[0] + 1 < len(lines) else ""
+    return re.match(r"[\s:|+-]*FileScan ", child) is not None
 
 
 

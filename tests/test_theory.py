@@ -14,11 +14,10 @@ All inputs and hash families are deterministic, so the statistical
 bounds are fixed, non-flaky checks (5σ windows: a fixed draw from the
 family either passes forever or fails forever).
 
-The production ``fast_hash=True`` path (JVM xxhash64) is a DIFFERENT
-hash family from the portable md5-prefix default, so each statistical
-test runs as a parametrized twin over both families (VERDICT r3 next
-#6) — recall parity alone (test_ops.test_fast_hash_path_finds_same_dups)
-does not pin the fast path's estimate/hamming *distributions*.
+The sketches hash with the portable md5 prefix
+(``dedup.portable_hash60``), the one family that also has a DuckDB
+twin, so these pins and the cross-engine value checks cover the same
+arithmetic.
 """
 
 import math
@@ -41,13 +40,12 @@ def spark():
 # ------------------------------------------------------- MinHash
 
 
-@pytest.mark.parametrize("fast_hash", [False, True])
-def test_minhash_estimate_concentrates(spark, fast_hash):
+def test_minhash_estimate_concentrates(spark):
     """est_jaccard must track TRUE Jaccard (computed by exact Python set
     arithmetic over the same shingles) within the estimator's 5σ
     binomial bound — and must not show the 0/1 collapse of a degenerate
     permutation family.  Twin of test_cc.test_minhash_est_tracks_true_
-    jaccard, parametrized over both hash families."""
+    jaccard."""
     common = " ".join(f"shared{i:03d}" for i in range(120))
     ua = " ".join(f"alpha{i:03d}" for i in range(60))
     ub = " ".join(f"beta{i:03d}" for i in range(60))
@@ -59,22 +57,19 @@ def test_minhash_estimate_concentrates(spark, fast_hash):
     sets = sh.groupby("doc_id")["shingle"].apply(set)
     true_j = len(sets[1] & sets[2]) / len(sets[1] | sets[2])
     num_perm = 64
-    pairs = dedup.minhash_lsh_pairs(
-        docs, num_perm=num_perm, bands=32, fast_hash=fast_hash
-    )
+    pairs = dedup.minhash_lsh_pairs(docs, num_perm=num_perm, bands=32)
     row = pairs.where((F.col("doc_a") == 1) & (F.col("doc_b") == 2)).collect()
     assert row, "banded join should surface the pair at J≈0.5"
     est = row[0]["est_jaccard"]
     sigma = math.sqrt(true_j * (1 - true_j) / num_perm)
-    assert abs(est - true_j) < 5 * sigma, (est, true_j, sigma, fast_hash)
+    assert abs(est - true_j) < 5 * sigma, (est, true_j, sigma)
     assert 0.05 < est < 0.95
 
 
 # ------------------------------------------------------- SimHash
 
 
-@pytest.mark.parametrize("fast_hash", [False, True])
-def test_simhash_hamming_tracks_cosine(spark, fast_hash):
+def test_simhash_hamming_tracks_cosine(spark):
     """SimHash theory pin (Charikar hyperplane rounding): for token
     vectors at angle θ, each output bit differs with probability θ/π,
     so E[hamming] = bits·θ/π.  Ground truth θ comes from exact Python
@@ -93,7 +88,7 @@ def test_simhash_hamming_tracks_cosine(spark, fast_hash):
     docs = spark.createDataFrame(rows, "doc_id: long, text: string")
     sh = {
         r["doc_id"]: int(r["simhash"])
-        for r in dedup.simhash(docs, bits=bits, fast_hash=fast_hash).collect()
+        for r in dedup.simhash(docs, bits=bits).collect()
     }
     hams = []
     for idx, (c, u) in enumerate(levels):
@@ -104,11 +99,9 @@ def test_simhash_hamming_tracks_cosine(spark, fast_hash):
         expect = bits * p
         sigma = math.sqrt(bits * p * (1 - p))
         ham = bin(sh[idx * 2] ^ sh[idx * 2 + 1]).count("1")
-        assert abs(ham - expect) < 5 * sigma, (
-            idx, ham, expect, sigma, fast_hash,
-        )
+        assert abs(ham - expect) < 5 * sigma, (idx, ham, expect, sigma)
         hams.append(ham)
-    assert hams[0] < hams[1] < hams[2], (hams, fast_hash)
+    assert hams[0] < hams[1] < hams[2], hams
     # identical docs: hamming must be exactly 0 (θ = 0)
     twin = spark.createDataFrame(
         [(100, "same text twice over"), (101, "same text twice over")],
@@ -116,7 +109,7 @@ def test_simhash_hamming_tracks_cosine(spark, fast_hash):
     )
     tw = {
         r["doc_id"]: int(r["simhash"])
-        for r in dedup.simhash(twin, bits=bits, fast_hash=fast_hash).collect()
+        for r in dedup.simhash(twin, bits=bits).collect()
     }
     assert tw[100] == tw[101]
 
