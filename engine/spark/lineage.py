@@ -7,16 +7,21 @@ Replaces the reference's pickle checkpoints
   * work is bucketed by ``part_hash = pmod(xxhash64(conv_id), n_buckets)``
     — a conversation never straddles buckets, so a completed bucket is a
     complete set of documents;
-  * after a bucket's output commits, a lineage row
-    (input_snapshot_id, run_id, part_hash, turn_count, conv_count,
-    image_count, bucket_sig, ts, status) is appended;
+  * after a job's outputs commit, it appends one lineage file: per
+    extracted bucket a row (input_snapshot_id, run_id, part_hash,
+    turn_count, conv_count, image_count, bucket_sig, ts, status='done'),
+    and per bucket a derived stage wrote a row whose status is that
+    stage's table name (counts and bucket_sig NULL);
   * on restart, buckets with status='done' for the same input snapshot
     are skipped — or, with ``detect_changes``, buckets whose
     CONTENT signature matches their latest completed run (incremental
-    recompute independent of snapshot ids); outputs are written with
-    dynamic partition overwrite keyed on part_hash, so replays are
-    idempotent — run-twice == run-once (the reference's stage-skip
-    semantics, improved to partition granularity);
+    recompute independent of snapshot ids); a derived stage rebuilds a
+    bucket unless its latest stage row is at least as new as the
+    bucket's latest 'done' row, so lineage is the one record of what
+    each bucket holds; outputs are written with dynamic partition
+    overwrite keyed on part_hash, so replays are idempotent — run-twice
+    == run-once (the reference's stage-skip semantics, improved to
+    partition granularity);
   * downstream consumers read deltas via changed_buckets_since /
     read_turns_since (CDC cursor over lineage timestamps), and
     compact_turns keeps bucket partitions at one file each.
@@ -28,6 +33,7 @@ Iceberg catalog slots in unchanged.
 
 from __future__ import annotations
 
+import functools
 import inspect
 import os
 import re
@@ -78,13 +84,10 @@ def read_lineage(spark: SparkSession, output_dir: str) -> DataFrame | None:
     )
     if not files:
         return None
-    try:
-        # mergeSchema: lineage files written by older engine versions may
-        # lack newer columns (bucket_sig, ts) — union the footers so they
-        # surface as nulls instead of being silently dropped
-        return spark.read.option("mergeSchema", "true").parquet(*files)
-    except Exception:
-        return None
+    # mergeSchema: lineage files written by older engine versions may
+    # lack newer columns (bucket_sig, ts) — union the footers so they
+    # surface as nulls instead of being silently dropped
+    return spark.read.option("mergeSchema", "true").parquet(*files)
 
 
 def done_buckets(spark: SparkSession, output_dir: str, snapshot_id: str) -> DataFrame | None:
@@ -99,34 +102,6 @@ def done_buckets(spark: SparkSession, output_dir: str, snapshot_id: str) -> Data
         .select("part_hash")
         .distinct()
     )
-
-
-def _partition_buckets(path: str) -> set[int]:
-    """part_hash values already materialized under a partitioned parquet
-    dir (driver-side listing — ≤ n_buckets entries, no Spark job)."""
-    if not os.path.exists(path):
-        return set()
-    out: set[int] = set()
-    for name in os.listdir(path):
-        if name.startswith("part_hash="):
-            try:
-                out.add(int(name.split("=", 1)[1]))
-            except ValueError:
-                pass
-    return out
-
-
-def _stage_coverage(
-    stage_out: str, committed: set[int], run_buckets: list[int]
-) -> list[int]:
-    """Buckets a derived stage must (re)write: this run's buckets plus
-    any ``committed`` turns buckets the stage's table doesn't cover yet —
-    the backfill rule shared by every stage (a completed extraction
-    re-run with a stage newly enabled must fill it for already-done
-    buckets)."""
-    have = _partition_buckets(stage_out)
-    backfill = committed - have - set(run_buckets)
-    return sorted(set(run_buckets) | backfill)
 
 
 def _bucket_sigs(src: DataFrame) -> dict[int, int]:
@@ -248,28 +223,38 @@ def compact_turns(
 def _lineage_state(
     spark: SparkSession, output_dir: str, snapshot_id: str
 ) -> dict[int, Row]:
-    """The job's one read of ``_lineage``: per bucket with a completed
-    run (≤ n_buckets rows), ``snap_tc`` — the max turn_count recorded for
+    """The job's one read of ``_lineage``: per bucket with a 'done' row
+    (≤ n_buckets rows), ``snap_tc`` — the max turn_count recorded for
     ``snapshot_id`` (None if the snapshot never completed the bucket) —
-    and the ``sig`` and ``turn_count`` of the latest completed run.  Rows
-    lacking a timestamp or signature (files written before those columns
-    existed) never count as the latest."""
+    the ``sig`` and ``turn_count`` of the latest completed run,
+    ``turns_ts``, the time of that run, and per ``STAGES`` entry, under
+    its table name, the time of the bucket's latest build of that stage
+    (None if it has none).  Rows lacking a timestamp or signature (files
+    written before those columns existed) never count as the latest."""
     lin = read_lineage(spark, output_dir)
     if lin is None:
         return {}
     for col, typ in (("bucket_sig", "long"), ("ts", "double")):
         if col not in lin.columns:
             lin = lin.withColumn(col, F.lit(None).cast(typ))
-    snap = F.col("input_snapshot_id") == snapshot_id
-    sig_ts = F.when(F.col("bucket_sig").isNotNull(), F.col("ts"))
+    done = F.col("status") == "done"
+    snap = done & (F.col("input_snapshot_id") == snapshot_id)
+    done_ts = F.when(done, F.col("ts"))
+    sig_ts = F.when(F.col("bucket_sig").isNotNull(), done_ts)
     rows = (
-        lin.filter(F.col("status") == "done")
-        .groupBy("part_hash")
+        lin.groupBy("part_hash")
         .agg(
             F.max(F.when(snap, F.col("turn_count"))).alias("snap_tc"),
             F.max_by("bucket_sig", sig_ts).alias("sig"),
-            F.max_by("turn_count", "ts").alias("turn_count"),
+            F.max_by("turn_count", done_ts).alias("turn_count"),
+            # a 'done' row without a timestamp is older than any stage row
+            F.max(F.when(done, F.coalesce("ts", F.lit(0.0)))).alias("turns_ts"),
+            *[
+                F.max(F.when(F.col("status") == st.out, F.col("ts"))).alias(st.out)
+                for st in STAGES
+            ],
         )
+        .where(F.col("turns_ts").isNotNull())
         .collect()
     )
     return {int(r["part_hash"]): r for r in rows}
@@ -343,10 +328,8 @@ def _build_curation(
     # LEFT join from the PII side: pii_scrub is a projection (exactly one
     # row per conversation), while repetition_stats yields no row for a
     # conv whose normalized content is empty (e.g. all OCR stubs) — an
-    # inner join would silently drop those convs from the curation table
-    # AND leave their bucket partition unwritten, so _stage_coverage would
-    # re-queue it forever.  Empty-content convs keep a row with
-    # n_tokens=0 and NULL ratios.
+    # inner join would silently drop those convs from the curation table.
+    # Empty-content convs keep a row with n_tokens=0 and NULL ratios.
     pii = etext.pii_scrub(docs_for).drop("clean_text")
     # the quality gate (same semantics as the corpus_curation contract
     # query: NULL metrics fail the gate).  Thresholds are evaluated at
@@ -394,20 +377,13 @@ def _build_line_counts(docs: DataFrame) -> DataFrame:
     ).agg(F.countDistinct("conv_id").alias("n_docs"))
 
 
-def _publish_boilerplate(
-    counts: DataFrame, line_dedup_min_df: int, stale_buckets: list[int]
-) -> DataFrame:
+def _publish_boilerplate(counts: DataFrame, line_dedup_min_df: int) -> DataFrame:
     # A sum over the compact counts table only (8-byte keys + counts,
     # never text), wholesale-overwritten, cheap to recompute.  A consumer
     # strips boilerplate by anti-joining exploded doc lines against
     # boilerplate_lines on the fingerprint; the threshold is evaluated at
     # READ time of the counts, so re-publishing with a different min_df
     # needs no text re-scan.
-    if stale_buckets:
-        raise RuntimeError(
-            f"line-dedup counts are stale for buckets {stale_buckets[:8]}; "
-            "refusing to publish boilerplate_lines from a partial counts table"
-        )
     return (
         counts.groupBy("lfp")
         .agg(F.sum("n_docs").alias("line_df"))
@@ -521,10 +497,13 @@ class Stage(NamedTuple):
 
 
 # Every stage follows the rule of the reference's checkpoints: skip what
-# is done, compute and save the rest — per bucket, with backfill
-# (_stage_coverage).  Coverage is driven by the COMMITTED turns table, not
-# this run's delta, so a completed extraction re-run with a stage newly
-# enabled fills it for already-done buckets.
+# is done, compute and save the rest — per bucket, with backfill.  The
+# record of what is done is the lineage: a bucket needs the stage unless
+# its latest row for the stage's table is at least as new as its latest
+# 'done' row.  So a completed extraction re-run with a stage newly enabled
+# fills it for already-done buckets, and a bucket re-extracted without the
+# stage gets it rebuilt the next time the stage runs (for a stage built
+# from the raw input: the next time the job's input holds the bucket).
 STAGES = (
     Stage("spans", "spans", ("turns",), _build_spans),
     Stage("translate", "docs_translated", ("turns",), _build_translated_docs),
@@ -598,9 +577,14 @@ def run_with_resume(
     snapshot id with identical content reprocesses nothing.
 
     Every mode reads the lineage table once, at job start
-    (``_lineage_state``), and aggregates the input once per bucket
-    (``_bucket_sigs``): its keys are the buckets this run processes, its
-    values their lineage signatures.  Each payload is parsed once:
+    (``_lineage_state``), which decides both the buckets to extract and
+    the buckets each enabled stage must (re)build, and aggregates the
+    input once per bucket (``_bucket_sigs``): its keys are the buckets
+    the input holds, its values their lineage signatures.  A stage that
+    builds from the input rebuilds only buckets the input holds.  A no-op
+    resume whose stages are all current reads no other table (a
+    publishing stage still rewrites its global table).  Each payload is
+    parsed once:
     ``quarantine=True`` takes its rows from the committed turns with
     empty markdown (``quarantine_from_turns``), not from a second parse.
 
@@ -640,55 +624,73 @@ def run_with_resume(
     done_tc = {
         b: r["snap_tc"] for b, r in state.items() if r["snap_tc"] is not None
     }
-    if done_tc and not (force or detect_changes):
-        src = src.filter(~F.col("part_hash").isin(sorted(done_tc)))
-    # The bucket set THIS run processes is the key set of the one column-
-    # pruned input aggregation (≤ n_buckets rows).  It scopes the
-    # committed-turns re-read below: if the output dir is reused across
-    # snapshots, partitions left by an older snapshot (buckets absent
-    # from the current input) must not fold into this run's docs or
-    # lineage rows.  In detect_changes mode it covers the whole input.
+    # The buckets the input holds are the key set of the one column-pruned
+    # input aggregation (≤ n_buckets rows); THIS run processes those not
+    # skipped.  That set scopes the committed-turns re-read below: if the
+    # output dir is reused across snapshots, partitions left by an older
+    # snapshot (buckets absent from the current input) must not fold into
+    # this run's docs or lineage rows.
     bucket_sigs = _bucket_sigs(src)
-    run_buckets = sorted(bucket_sigs)
-    if detect_changes and not force:
+    if force:
+        skipped = set()
+    elif detect_changes:
         stored = {b: r["sig"] for b, r in state.items()}
-        unchanged = [b for b in run_buckets if stored.get(b) == bucket_sigs[b]]
-        if unchanged:
-            src = src.filter(~F.col("part_hash").isin(unchanged))
-            run_buckets = sorted(set(run_buckets) - set(unchanged))
+        skipped = {b for b, sig in bucket_sigs.items() if stored.get(b) == sig}
+    else:
+        skipped = bucket_sigs.keys() & done_tc.keys()
+    run_buckets = sorted(bucket_sigs.keys() - skipped)
+    if skipped:
+        src = src.filter(F.col("part_hash").isin(run_buckets))
 
     turns_out = os.path.join(output_dir, "turns")
     docs_out = os.path.join(output_dir, "docs")
+    # Downstream stages read the committed parquet back (scan, not
+    # recompute), restricted to the buckets they need: a conversation
+    # never straddles buckets, so each processed bucket is doc-complete.
+    # The table is opened at most once, and only when something reads it.
+    committed = functools.cache(lambda: spark.read.parquet(turns_out))
+    metrics = []
     if run_buckets:
         turns = pipeline.extract_turns(
             src.select("conv_id", "turn_idx", "text")
         )
         _write_buckets(with_part_hash(turns, n_buckets), turns_out)
-    elif not os.path.exists(turns_out):
-        # nothing to process and nothing committed before (empty input):
-        # there is no table to read back — return zeros, don't raise
-        return {"buckets_processed": 0, "turns_total": 0}
-
-    # Downstream stages read the committed parquet back (scan, not
-    # recompute), restricted to the buckets they need: a conversation
-    # never straddles buckets, so each processed bucket is doc-complete.
-    committed = spark.read.parquet(turns_out)
-    new_turns = committed.filter(F.col("part_hash").isin(run_buckets))
-    if run_buckets:
+        new_turns = committed().filter(F.col("part_hash").isin(run_buckets))
         docs = pipeline.extract_docs(new_turns)
         _write_buckets(with_part_hash(docs, n_buckets), docs_out)
+        # counts for this run's lineage rows, over the committed turns in
+        # one column-pruned grouped pass (≤ n_buckets rows collected)
+        metrics = (
+            new_turns.groupBy("part_hash")
+            .agg(
+                F.count("*").alias("turn_count"),
+                F.countDistinct("conv_id").alias("conv_count"),
+                F.sum(F.size("images")).alias("image_count"),
+            )
+            .collect()
+        )
 
-    committed_buckets = _partition_buckets(turns_out)
     sources = {
-        "turns": lambda: committed,
+        "turns": committed,
         "docs": lambda: spark.read.parquet(docs_out),
         "input": lambda: with_part_hash(transcripts, n_buckets),
     }
+    written: list[tuple[int, str]] = []
     for st in STAGES:
         if not flags[st.flag]:
             continue
         out = os.path.join(output_dir, st.out)
-        need = _stage_coverage(out, committed_buckets, run_buckets)
+        # this run's buckets, plus every bucket whose latest build of the
+        # stage is missing or older than its turns; the rows of one run
+        # share a timestamp, so a stage built with its turns is current
+        stale = {
+            b for b, r in state.items()
+            if r[st.out] is None or r[st.out] < r["turns_ts"]
+        }
+        if "input" in st.sources:
+            # a build from the input can only rebuild the buckets it holds
+            stale &= bucket_sigs.keys()
+        need = sorted(stale | set(run_buckets))
         if need and "docs" in st.sources and not os.path.exists(docs_out):
             # a silent no-op here would let a global table be published
             # from a stale/partial stage table — fail loudly instead (the
@@ -707,49 +709,34 @@ def run_with_resume(
             if "part_hash" not in built.columns:
                 built = with_part_hash(built, n_buckets)
             _write_buckets(built, out)
+            written += [(b, st.out) for b in need]
         if st.publish and os.path.exists(out):
-            stale = sorted(committed_buckets - _partition_buckets(out))
-            table = _call(
-                st.publish_build,
-                [spark.read.parquet(out)],
-                {**opts, "stale_buckets": stale},
-            )
+            # every bucket of the stage table is current here
+            table = _call(st.publish_build, [spark.read.parquet(out)], opts)
             table.write.mode("overwrite").parquet(
                 os.path.join(output_dir, st.publish)
             )
 
-    # lineage rows for the buckets processed in this run, counted over
-    # their committed turns in one column-pruned grouped pass (≤ n_buckets
-    # rows collected).  Every row records the bucket's input signature,
-    # so any LATER run can resume by content (detect_changes) regardless
-    # of the mode this run used.
-    metrics = (
-        new_turns.groupBy("part_hash")
-        .agg(
-            F.count("*").alias("turn_count"),
-            F.countDistinct("conv_id").alias("conv_count"),
-            F.sum(F.size("images")).alias("image_count"),
-        )
-        .collect()
-        if run_buckets
-        else []
-    )
+    # One lineage row per bucket extracted in this run, recording its
+    # input signature, so any LATER run can resume by content
+    # (detect_changes) regardless of the mode this run used; and one row
+    # per bucket a stage wrote, whose status names the stage's table.
     now = float(time.time())
+    run = {"input_snapshot_id": snapshot_id, "run_id": run_id, "ts": now}
     rows = [
         {
-            "input_snapshot_id": snapshot_id,
-            "run_id": run_id,
+            **run,
             "part_hash": int(m["part_hash"]),
             "turn_count": int(m["turn_count"]),
             "conv_count": int(m["conv_count"]),
             "image_count": int(m["image_count"] or 0),
             "bucket_sig": bucket_sigs[int(m["part_hash"])],
-            "ts": now,
             "status": "done",
         }
         for m in metrics
     ]
-    if rows:
+    stage_rows = [{**run, "part_hash": b, "status": t} for b, t in written]
+    if rows or stage_rows:
         schema = (
             "input_snapshot_id string, run_id string, part_hash int, "
             "turn_count long, conv_count long, image_count long, "
@@ -758,9 +745,12 @@ def run_with_resume(
         # One file per run: every later read_lineage lists and opens them
         # all.  The rows go in as pandas (one Arrow batch): coalescing
         # the Python-row path to one task doubled the write's time.
-        spark.createDataFrame(
-            pd.DataFrame(rows, columns=LINEAGE_COLS), schema=schema
-        ).coalesce(1).write.mode("append").parquet(_lineage_path(output_dir))
+        # Object columns keep the integers exact: with the stage rows'
+        # NULLs, pandas would widen them to float64 and round bucket_sig.
+        frame = pd.DataFrame(rows + stage_rows, columns=LINEAGE_COLS, dtype=object)
+        spark.createDataFrame(frame, schema=schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(_lineage_path(output_dir))
 
     # total turns from the lineage state plus this run's rows (every done
     # bucket has one), NOT a scan of the committed turns table — at 10^12

@@ -6,6 +6,8 @@ import os
 
 import pandas as pd
 import pytest
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrameReader, DataFrameWriter
 from pyspark.sql import functions as F
 
 from engine import fixtures, oracle
@@ -424,8 +426,7 @@ def test_cdc_read_and_compaction(spark, transcripts_pdf, tmp_path):
     )
     r = lineage.compact_turns(spark, out)
     assert r["files_after"] <= r["files_before"]
-    buckets = len(lineage._partition_buckets(os.path.join(out, "turns")))
-    assert r["files_after"] == buckets
+    assert r["files_after"] == _n_partitions(out, "turns")
     post = (
         spark.read.parquet(os.path.join(out, "turns"))
         .orderBy("conv_id", "turn_idx").toPandas()
@@ -664,6 +665,36 @@ def test_quarantine_stage_equals_pipeline_quarantine(
     assert got(out) == want2
 
 
+@pytest.mark.parametrize("detect_changes", [False, True])
+def test_input_stage_on_half_input_leaves_other_half_stale(
+    spark, transcripts_pdf, tmp_path, detect_changes
+):
+    """A stage built from the input, run over half the input, records
+    only the buckets that half holds: the next full-input run still
+    builds the other half, so quarantine ends equal to
+    pipeline.quarantine over the full input."""
+    p = str(tmp_path / "in.parquet")
+    _hostile_corpus(transcripts_pdf).to_parquet(p, index=False)
+    df = spark.read.parquet(p)
+    odd = "part_hash % 2 = 1"
+    half = lineage.with_part_hash(df, 8).filter(odd).drop("part_hash")
+    want = pipeline.quarantine(df)
+    assert lineage.with_part_hash(want, 8).filter(f"NOT ({odd})").count() > 0
+    out = str(tmp_path / "out")
+    kw = dict(n_buckets=8, detect_changes=detect_changes)
+    lineage.run_with_resume(spark, df, out, snapshot_id="s1", **kw)
+    snap = "s1" if not detect_changes else "s2"
+    r = lineage.run_with_resume(spark, half, out, snapshot_id=snap,
+                                quarantine=True, **kw)
+    assert r["buckets_processed"] == 0
+    snap = "s1" if not detect_changes else "s3"
+    r = lineage.run_with_resume(spark, df, out, snapshot_id=snap,
+                                quarantine=True, **kw)
+    assert r["buckets_processed"] == 0
+    got = spark.read.parquet(os.path.join(out, "quarantine"))
+    assert _quarantine_rows(got) == _quarantine_rows(want)
+
+
 def test_quarantine_stage_runs_no_python_udf(spark, transcripts_path, tmp_path):
     """The quarantine stage's executed plan has no Python-UDF node: the
     payloads are parsed once, by the turns write."""
@@ -835,27 +866,145 @@ def test_read_lineage_without_files(spark, tmp_path):
     assert lineage.read_lineage(spark, out) is None
 
 
-@pytest.mark.parametrize("crash_in", ["extract_docs", "extract_spans"])
+def test_unreadable_lineage_file_fails_the_job(spark, transcripts_path,
+                                               tmp_path):
+    """A file in _lineage that is not parquet fails the job before it
+    writes anything; it is not read as "no lineage", which would
+    reprocess every bucket and append another file on every run."""
+    out = str(tmp_path / "out")
+    df = spark.read.parquet(transcripts_path)
+    lineage.run_with_resume(spark, df, out, snapshot_id="s", n_buckets=8)
+    lin = os.path.join(out, "_lineage")
+    with open(os.path.join(lin, "copied.parquet"), "w") as f:
+        f.write("not a parquet file")
+    before = sorted(os.listdir(lin))
+    with pytest.raises(Py4JJavaError):
+        lineage.run_with_resume(spark, df, out, snapshot_id="s", n_buckets=8)
+    assert sorted(os.listdir(lin)) == before
+
+
+def _n_partitions(out, table):
+    path = os.path.join(out, table)
+    return sum(d.startswith("part_hash=") for d in os.listdir(path))
+
+
+def test_stage_rebuilt_after_edit_without_it(spark, transcripts_pdf,
+                                             tmp_path):
+    """A bucket re-extracted by a run without the spans stage gets its
+    spans rebuilt the next time the stage runs: an existing partition
+    built from older turns is not current."""
+    out = str(tmp_path / "out")
+    p1, p2 = str(tmp_path / "in1.parquet"), str(tmp_path / "in2.parquet")
+    transcripts_pdf.to_parquet(p1, index=False)
+    edited = transcripts_pdf.copy()
+    mask = (edited["conv_id"] == edited["conv_id"].iloc[0]) & (
+        edited["turn_idx"] == 0
+    )
+    edited.loc[mask, "text"] = "# EDITED HEADLINE\n\nnew body text here"
+    edited.to_parquet(p2, index=False)
+    kw = dict(n_buckets=8, detect_changes=True)
+    lineage.run_with_resume(spark, spark.read.parquet(p1), out,
+                            snapshot_id="s1", spans=True, **kw)
+    df2 = spark.read.parquet(p2)
+    r = lineage.run_with_resume(spark, df2, out, snapshot_id="s2", **kw)
+    assert r["buckets_processed"] == 1
+    r = lineage.run_with_resume(spark, df2, out, snapshot_id="s3",
+                                spans=True, **kw)
+    assert r["buckets_processed"] == 0
+
+    turns = spark.read.parquet(os.path.join(out, "turns"))
+    spans = spark.read.parquet(os.path.join(out, "spans")).drop("part_hash")
+    want = pipeline.extract_spans(turns).select(*spans.columns)
+    assert sorted(map(repr, map(tuple, spans.collect()))) == sorted(
+        map(repr, map(tuple, want.collect()))
+    )
+
+
+def test_noop_resume_reads_only_lineage(spark, transcripts_path, tmp_path,
+                                        monkeypatch):
+    """A no-op resume whose stages are all current opens no table but the
+    lineage and appends nothing, also when the quarantine table is sparse
+    (buckets without diverted rows have no partition)."""
+    out = str(tmp_path / "out")
+    df = spark.read.parquet(transcripts_path)
+    kw = dict(snapshot_id="s", n_buckets=64, spans=True, quarantine=True)
+    lineage.run_with_resume(spark, df, out, **kw)
+    assert 0 < _n_partitions(out, "quarantine") < _n_partitions(out, "turns")
+    lin = os.path.join(out, "_lineage")
+    files = sorted(os.listdir(lin))
+
+    real = DataFrameReader.parquet
+    paths = []
+
+    def recording(self, *p, **k):
+        paths.extend(p)
+        return real(self, *p, **k)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", recording)
+    r = lineage.run_with_resume(spark, df, out, **kw)
+    assert r["buckets_processed"] == 0
+    assert paths and all(os.path.dirname(p) == lin for p in paths), paths
+    assert sorted(os.listdir(lin)) == files
+
+
+def test_dir_without_stage_rows_rebuilds_stages_once(spark, transcripts_path,
+                                                     tmp_path):
+    """An output dir whose lineage holds only 'done' rows (written before
+    stages were recorded) rebuilds an enabled stage for every bucket
+    once, records it, and builds it for none on the next run."""
+    out = str(tmp_path / "out")
+    df = spark.read.parquet(transcripts_path)
+    kw = dict(snapshot_id="s", n_buckets=8, spans=True)
+    lineage.run_with_resume(spark, df, out, **kw)
+    lin = os.path.join(out, "_lineage")
+    done = lineage.read_lineage(spark, out).where("status = 'done'").toPandas()
+    for f in os.listdir(lin):
+        os.remove(os.path.join(lin, f))
+    done.to_parquet(os.path.join(lin, "old.parquet"), index=False)
+    spans = os.path.join(out, "spans")
+    ref = _table_rows(spark, spans)
+
+    def spans_rows():
+        return lineage.read_lineage(spark, out).where("status = 'spans'").count()
+
+    assert spans_rows() == 0
+    assert lineage.run_with_resume(spark, df, out, **kw)["buckets_processed"] == 0
+    assert spans_rows() == len(done) == 8
+    assert _table_rows(spark, spans) == ref
+    files = sorted(os.listdir(lin))
+    lineage.run_with_resume(spark, df, out, **kw)
+    assert sorted(os.listdir(lin)) == files
+
+
+@pytest.mark.parametrize(
+    "crash_in", ["extract_docs", "extract_spans", "lineage_append"]
+)
 def test_crash_then_rerun_equals_clean_run(spark, transcripts_path, tmp_path,
                                            monkeypatch, crash_in):
     """A job that dies after committing turns (and docs) but before its
-    lineage append, re-run with the same arguments, leaves the same
-    tables, result and lineage rows as one clean run."""
+    lineage append completes — in docs, in a stage, or in the append
+    itself, after every table is written — re-run with the same
+    arguments, leaves the same tables, result and lineage rows as one
+    clean run."""
     df = spark.read.parquet(transcripts_path)
     kw = dict(snapshot_id="s", n_buckets=8, spans=True, quarantine=True)
     clean, crashed = str(tmp_path / "clean"), str(tmp_path / "crashed")
     want = lineage.run_with_resume(spark, df, clean, **kw)
 
-    real = getattr(pipeline, crash_in)
+    append = crash_in == "lineage_append"
+    owner, name = (DataFrameWriter, "parquet") if append else (pipeline, crash_in)
+    real = getattr(owner, name)
     calls = []
 
     def crash_once(*a, **k):
-        calls.append(1)
-        if len(calls) == 1:
-            raise RuntimeError("injected crash")
+        # the append is the job's one write to the _lineage path
+        if not append or str(a[1]).endswith("_lineage"):
+            calls.append(1)
+            if len(calls) == 1:
+                raise RuntimeError("injected crash")
         return real(*a, **k)
 
-    monkeypatch.setattr(pipeline, crash_in, crash_once)
+    monkeypatch.setattr(owner, name, crash_once)
     with pytest.raises(RuntimeError, match="injected crash"):
         lineage.run_with_resume(spark, df, crashed, **kw)
     assert os.path.isdir(os.path.join(crashed, "turns"))
@@ -868,7 +1017,8 @@ def test_crash_then_rerun_equals_clean_run(spark, transcripts_path, tmp_path,
         ), table
     lin = [os.path.join(d, "_lineage") for d in (crashed, clean)]
     got, ref = (_table_rows(spark, p, drop=("run_id", "ts")) for p in lin)
-    assert got == ref and len(got) == want["buckets_processed"] == 8
+    n_done = spark.read.parquet(lin[0]).where("status = 'done'").count()
+    assert got == ref and n_done == want["buckets_processed"] == 8
 
 
 def test_doc_content_strips_what_the_literal_stripped(spark):
@@ -921,7 +1071,7 @@ def test_all_stages_backfill_on_half_completed_resume(
     spark, transcripts_pdf, tmp_path
 ):
     """VERDICT r3 next #7: resume over a HALF-completed output dir with
-    every stage flag enabled at once — the shared _stage_coverage rule
+    every stage flag enabled at once — the shared lineage coverage rule
     must leave every derived stage covering every turns bucket, whether
     a bucket was extracted in phase 1 (backfill path) or phase 2 (this
     run's delta path)."""
