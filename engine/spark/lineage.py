@@ -34,7 +34,6 @@ Iceberg catalog slots in unchanged.
 from __future__ import annotations
 
 import functools
-import inspect
 import os
 import re
 import time
@@ -301,9 +300,7 @@ def _build_translated_docs(turns: DataFrame) -> DataFrame:
     return tmod.translated_docs(tmod.translate_turns(turns))
 
 
-def _build_curation(
-    docs: DataFrame, curate_max_dup_bigram: float, curate_min_tokens: int
-) -> DataFrame:
+def _build_curation(docs: DataFrame) -> DataFrame:
     # Per-conversation curation metrics table (round-4 quality ops:
     # repetition stats + PII counts over the assembled documents) — the
     # scores a 10^12-turn corpus filter/monitor job reads instead of
@@ -332,14 +329,15 @@ def _build_curation(
     # Empty-content convs keep a row with n_tokens=0 and NULL ratios.
     pii = etext.pii_scrub(docs_for).drop("clean_text")
     # the quality gate (same semantics as the corpus_curation contract
-    # query: NULL metrics fail the gate).  Thresholds are evaluated at
-    # WRITE time and stored alongside the raw metrics, so a consumer can
-    # always re-derive `keep` with different cutoffs from the same table
-    # without re-scanning text; dedup keep-lists are the --dedup stage's
-    # job, not curation's.
+    # query: NULL metrics fail the gate).  Its cutoffs are fixed: lineage
+    # does not record them, so a configurable cutoff would leave a resumed
+    # table mixing rows gated two ways.  The raw metrics are stored
+    # alongside `keep`, so a consumer re-derives it with other cutoffs
+    # from the same table without re-scanning text; dedup keep-lists are
+    # the --dedup stage's job, not curation's.
     kept = F.coalesce(
-        F.col("dup_bigram_ratio") <= curate_max_dup_bigram, F.lit(False)
-    ) & F.coalesce(F.col("n_tokens") >= curate_min_tokens, F.lit(False))
+        F.col("dup_bigram_ratio") <= 0.5, F.lit(False)
+    ) & F.coalesce(F.col("n_tokens") >= 5, F.lit(False))
     return pii.join(rep, "doc_id", "left").select(
         F.col("doc_id").alias("conv_id"),
         F.coalesce("n_tokens", F.lit(0)).cast("long").alias("n_tokens"),
@@ -377,35 +375,34 @@ def _build_line_counts(docs: DataFrame) -> DataFrame:
     ).agg(F.countDistinct("conv_id").alias("n_docs"))
 
 
-def _publish_boilerplate(counts: DataFrame, line_dedup_min_df: int) -> DataFrame:
+def _publish_boilerplate(counts: DataFrame) -> DataFrame:
     # A sum over the compact counts table only (8-byte keys + counts,
     # never text), wholesale-overwritten, cheap to recompute.  A consumer
     # strips boilerplate by anti-joining exploded doc lines against
-    # boilerplate_lines on the fingerprint; the threshold is evaluated at
-    # READ time of the counts, so re-publishing with a different min_df
-    # needs no text re-scan.
+    # boilerplate_lines on the fingerprint.  A line is boilerplate when at
+    # least 3 conversations hold it; the cutoff is fixed so the table
+    # depends on line_counts alone, and a consumer wanting another cutoff
+    # sums line_counts' per-bucket doc counts itself, with no text re-scan.
     return (
         counts.groupBy("lfp")
         .agg(F.sum("n_docs").alias("line_df"))
-        .where(F.col("line_df") >= line_dedup_min_df)
+        .where(F.col("line_df") >= 3)
     )
 
 
-def _build_conv_curation(
-    rows: DataFrame, conv_min_turns: int, conv_max_repeat: float
-) -> DataFrame:
+def _build_conv_curation(rows: DataFrame) -> DataFrame:
     # Conversation-level curation (transcript_curation): run-collapse
     # repeat ratio, alternation violations and the SFT-usability gate.
     # Computed from the ORIGINAL transcripts (role/text never reach the
     # committed turns table — the parse stage prunes them), and
     # conversations never split across buckets (part_hash is a function
-    # of conv_id), so the metrics are bucket-local.
+    # of conv_id), so the metrics are bucket-local.  The gate uses
+    # transcript_curation's default cutoffs, fixed for the same reason as
+    # _build_curation's; the raw metrics stay in the table.
     from engine.spark import conversation
 
     return conversation.transcript_curation(
-        rows.select("conv_id", "turn_idx", "role", "text"),
-        min_turns=conv_min_turns,
-        max_repeat_ratio=conv_max_repeat,
+        rows.select("conv_id", "turn_idx", "role", "text")
     )
 
 
@@ -483,15 +480,17 @@ def _publish_near_dup_clusters(sigs: DataFrame) -> DataFrame:
 class Stage(NamedTuple):
     """A derived table of ``run_with_resume``, kept per bucket."""
 
-    flag: str  # the run_with_resume keyword that enables it
+    # the run_with_resume keyword that enables it; run_extract.py offers
+    # it as --<flag> with "_" spelled "-"
+    flag: str
+    doc: str  # one line on what it writes: the CLI switch's help
     out: str  # its bucket-partitioned table under the output dir
     # what ``build`` reads, each restricted to the buckets to (re)write:
     # the committed "turns" or "docs", or the raw "input" rows
     sources: tuple[str, ...]
-    # sources → the stage rows; run options are passed by parameter name
-    build: Callable[..., DataFrame]
-    # the global table rewritten from the whole stage table after each
-    # run, and the function computing it
+    build: Callable[..., DataFrame]  # sources → the stage rows
+    # the global table computed from the whole stage table, rewritten when
+    # a run wrote the stage or the table is missing, and its function
     publish: str | None = None
     publish_build: Callable[..., DataFrame] | None = None
 
@@ -505,37 +504,60 @@ class Stage(NamedTuple):
 # stage gets it rebuilt the next time the stage runs (for a stage built
 # from the raw input: the next time the job's input holds the bucket).
 STAGES = (
-    Stage("spans", "spans", ("turns",), _build_spans),
-    Stage("translate", "docs_translated", ("turns",), _build_translated_docs),
-    Stage("curate", "curation", ("docs",), _build_curation),
     Stage(
-        "line_dedup", "line_counts", ("docs",), _build_line_counts,
+        "spans", "also write the span/block table",
+        "spans", ("turns",), _build_spans,
+    ),
+    Stage(
+        "translate",
+        "also write translated documents (deterministic stand-in translator)",
+        "docs_translated", ("turns",), _build_translated_docs,
+    ),
+    Stage(
+        "curate",
+        "also write per-conversation curation metrics (repetition, PII "
+        "counts) over the documents, with a `keep` quality gate",
+        "curation", ("docs",), _build_curation,
+    ),
+    Stage(
+        "line_dedup",
+        "also write per-bucket line-fingerprint doc counts and the global "
+        "boilerplate_lines table",
+        "line_counts", ("docs",), _build_line_counts,
         "boilerplate_lines", _publish_boilerplate,
     ),
-    Stage("conv_curate", "conv_curation", ("input",), _build_conv_curation),
+    Stage(
+        "conv_curate",
+        "also write conversation-level curation (repeat ratio, role "
+        "alternation, SFT-usability gate) over the raw transcripts",
+        "conv_curation", ("input",), _build_conv_curation,
+    ),
     # diverted-rows table (error channel, pipeline.quarantine): the
     # committed turns say WHICH rows (empty markdown), the ORIGINAL
     # payloads say WHY — the committed turns don't carry text, but the
     # input covers done buckets too — so no payload is parsed a second
     # time
     Stage(
-        "quarantine", "quarantine", ("input", "turns"), quarantine_from_turns
+        "quarantine",
+        "also write the diverted-rows table (empty or tag-only payloads, "
+        "with reasons)",
+        "quarantine", ("input", "turns"), quarantine_from_turns,
     ),
     Stage(
-        "dedup", "fingerprints", ("docs",), _build_fingerprints,
+        "dedup",
+        "also write per-bucket document fingerprints and the global "
+        "exact-dup cluster table",
+        "fingerprints", ("docs",), _build_fingerprints,
         "dup_clusters", _publish_dup_clusters,
     ),
     Stage(
-        "near_dup", "signatures", ("docs",), _build_signatures,
+        "near_dup",
+        "also write per-bucket MinHash signatures and the global near-dup "
+        "cluster table",
+        "signatures", ("docs",), _build_signatures,
         "near_dup_clusters", _publish_near_dup_clusters,
     ),
 )
-
-
-def _call(fn: Callable[..., DataFrame], frames: list, opts: dict) -> DataFrame:
-    """``fn(*frames)`` plus the run options ``fn`` names as parameters."""
-    names = inspect.signature(fn).parameters
-    return fn(*frames, **{k: v for k, v in opts.items() if k in names})
 
 
 def run_with_resume(
@@ -545,24 +567,17 @@ def run_with_resume(
     snapshot_id: str,
     n_buckets: int = 64,
     force: bool = False,
-    spans: bool = False,
-    translate: bool = False,
-    dedup: bool = False,
-    near_dup: bool = False,
-    quarantine: bool = False,
-    curate: bool = False,
-    curate_max_dup_bigram: float = 0.5,
-    curate_min_tokens: int = 5,
-    conv_curate: bool = False,
-    conv_min_turns: int = 2,
-    conv_max_repeat: float = 0.5,
-    line_dedup: bool = False,
-    line_dedup_min_df: int = 3,
     detect_changes: bool = False,
     run_id: str | None = None,
+    **stages: bool,
 ) -> dict[str, int]:
     """Extract turns+docs, plus the ``STAGES`` whose flags are set, with
     bucket-granular resume.
+
+    ``stages`` maps a ``Stage.flag`` to whether the job runs that stage
+    (e.g. ``spans=True, quarantine=True``); a stage not named is off.  A
+    keyword that names no stage raises ``TypeError`` before anything is
+    read or written.
 
     Returns counts of processed buckets/turns (0 processed ⇒ everything
     was already done — the reference's 'checkpoint found, skipping'
@@ -581,10 +596,10 @@ def run_with_resume(
     the buckets each enabled stage must (re)build, and aggregates the
     input once per bucket (``_bucket_sigs``): its keys are the buckets
     the input holds, its values their lineage signatures.  A stage that
-    builds from the input rebuilds only buckets the input holds.  A no-op
-    resume whose stages are all current reads no other table (a
-    publishing stage still rewrites its global table).  Each payload is
-    parsed once:
+    builds from the input rebuilds only buckets the input holds.  A
+    publishing stage rewrites its global table only when the job wrote
+    the stage or the table is missing, so a no-op resume whose stages are
+    all current reads no other table.  Each payload is parsed once:
     ``quarantine=True`` takes its rows from the committed turns with
     empty markdown (``quarantine_from_turns``), not from a second parse.
 
@@ -597,26 +612,11 @@ def run_with_resume(
     is exact under that race (the writes themselves are idempotent dynamic
     partition overwrites)."""
     run_id = run_id or uuid.uuid4().hex
-    flags = {
-        "spans": spans,
-        "translate": translate,
-        "curate": curate,
-        "line_dedup": line_dedup,
-        "conv_curate": conv_curate,
-        "quarantine": quarantine,
-        "dedup": dedup,
-        "near_dup": near_dup,
-    }
-    unknown = [st.flag for st in STAGES if st.flag not in flags]
+    unknown = sorted(stages.keys() - {st.flag for st in STAGES})
     if unknown:
-        raise ValueError(f"stage table names unknown flags {unknown}")
-    opts = {
-        "curate_max_dup_bigram": curate_max_dup_bigram,
-        "curate_min_tokens": curate_min_tokens,
-        "conv_min_turns": conv_min_turns,
-        "conv_max_repeat": conv_max_repeat,
-        "line_dedup_min_df": line_dedup_min_df,
-    }
+        raise TypeError(
+            f"run_with_resume() got unexpected keyword arguments {unknown}"
+        )
 
     src = with_part_hash(transcripts, n_buckets)
     state = _lineage_state(spark, output_dir, snapshot_id)
@@ -677,7 +677,7 @@ def run_with_resume(
     }
     written: list[tuple[int, str]] = []
     for st in STAGES:
-        if not flags[st.flag]:
+        if not stages.get(st.flag):
             continue
         out = os.path.join(output_dir, st.out)
         # this run's buckets, plus every bucket whose latest build of the
@@ -705,17 +705,20 @@ def run_with_resume(
         if need:
             in_need = F.col("part_hash").isin(need)
             frames = [sources[s]().filter(in_need) for s in st.sources]
-            built = _call(st.build, frames, opts)
+            built = st.build(*frames)
             if "part_hash" not in built.columns:
                 built = with_part_hash(built, n_buckets)
             _write_buckets(built, out)
             written += [(b, st.out) for b in need]
-        if st.publish and os.path.exists(out):
+        # The global table is a function of the stage table alone, so it
+        # is current unless this job wrote the stage.  It is written
+        # before the lineage append: a job that dies in between leaves
+        # the stage due, and the re-run publishes again.
+        pub = st.publish and os.path.join(output_dir, st.publish)
+        if pub and os.path.exists(out) and (need or not os.path.exists(pub)):
             # every bucket of the stage table is current here
-            table = _call(st.publish_build, [spark.read.parquet(out)], opts)
-            table.write.mode("overwrite").parquet(
-                os.path.join(output_dir, st.publish)
-            )
+            table = st.publish_build(spark.read.parquet(out))
+            table.write.mode("overwrite").parquet(pub)
 
     # One lineage row per bucket extracted in this run, recording its
     # input signature, so any LATER run can resume by content

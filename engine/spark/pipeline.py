@@ -100,16 +100,6 @@ def export_markdown_files(
     return paths
 
 
-def run_full(transcripts: DataFrame) -> dict[str, DataFrame]:
-    turns = extract_turns(transcripts)
-    return {
-        "turns": turns,
-        "docs": extract_docs(turns),
-        "spans": extract_spans(turns),
-        "images": extract_images(turns),
-    }
-
-
 def write_clustered(
     df: DataFrame,
     path: str,

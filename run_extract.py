@@ -4,7 +4,11 @@
     spark-submit --py-files engine.zip run_extract.py \
         --input  /path/to/transcripts_parquet_or_table \
         --output /path/to/output_dir \
-        [--snapshot-id snap-001] [--buckets 4096] [--force]
+        [--snapshot-id snap-001] [--buckets 4096] [--force] \
+        [--detect-changes] [--spans] [--quarantine] ...
+
+One stage switch per ``lineage.STAGES`` entry: its flag with "_" spelled
+"-" (``--line-dedup``), its help the stage's ``doc``.
 
 The CLI analog of the reference's Gradio entry process_pdf
 (/root/reference/mistralocr_app.py:803-956): validate inputs, resolve
@@ -19,6 +23,8 @@ import time
 
 
 def main(argv: list[str] | None = None) -> int:
+    from engine.spark import lineage
+
     ap = argparse.ArgumentParser(description="transcript → markdown extraction")
     ap.add_argument("--input", required=True,
                     help="parquet path or table of transcripts")
@@ -32,66 +38,15 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--force", action="store_true",
                     help="reprocess even if lineage marks buckets done "
                          "(reference's use_existing_checkpoints=False)")
-    ap.add_argument("--spans", action="store_true",
-                    help="also write the span/block table")
     ap.add_argument("--detect-changes", action="store_true",
                     help="resume by CONTENT instead of snapshot id: skip "
                          "buckets whose input signature matches their last "
                          "completed run (incremental recompute)")
-    ap.add_argument("--translate", action="store_true",
-                    help="also write translated documents (T1 stage; "
-                         "deterministic stand-in translator — swap via "
-                         "translate.translate_turns_udf in production)")
-    ap.add_argument("--dedup", action="store_true",
-                    help="also write per-bucket document fingerprints "
-                         "(incremental) and the global exact-dup cluster "
-                         "table derived from them")
-    ap.add_argument("--near-dup", action="store_true",
-                    help="also write per-bucket MinHash signatures "
-                         "(incremental) and the global near-dup cluster "
-                         "table (banded pair-gen + connected components "
-                         "over the compact signature table)")
-    ap.add_argument("--quarantine", action="store_true",
-                    help="also write the diverted-rows error-channel "
-                         "table (empty/tag-only payloads with reasons); "
-                         "taken from the committed turns with empty "
-                         "markdown, so no payload is parsed twice")
-    ap.add_argument("--curate", action="store_true",
-                    help="also write the per-conversation curation "
-                         "metrics table (repetition/quality + PII "
-                         "counts over the assembled documents, plus a "
-                         "`keep` quality-gate column)")
-    ap.add_argument("--curate-max-dup-bigram", type=float, default=0.5,
-                    help="curate quality gate: max duplicated-bigram "
-                         "ratio for keep=true (default 0.5; NULL fails)")
-    ap.add_argument("--curate-min-tokens", type=int, default=5,
-                    help="curate quality gate: min token count for "
-                         "keep=true (default 5).  Gates are stamped at "
-                         "write time; the raw metrics stay in the table "
-                         "so keep can be re-derived with other cutoffs "
-                         "without re-scanning text")
-    ap.add_argument("--conv-curate", action="store_true",
-                    help="also write the conversation-level curation "
-                         "table (run-collapse repeat ratio, role-"
-                         "alternation violations, SFT-usability gate) "
-                         "over the RAW transcripts")
-    ap.add_argument("--conv-min-turns", type=int, default=2,
-                    help="conv-curate gate: min turns per conversation "
-                         "for keep=true (default 2)")
-    ap.add_argument("--conv-max-repeat", type=float, default=0.5,
-                    help="conv-curate gate: max run-collapse repeat "
-                         "ratio for keep=true (default 0.5)")
-    ap.add_argument("--line-dedup", action="store_true",
-                    help="also write per-bucket line-fingerprint doc "
-                         "counts + the global boilerplate_lines table "
-                         "(C4/CCNet cross-document line dedup)")
-    ap.add_argument("--line-dedup-min-df", type=int, default=3,
-                    help="line-dedup: a line is boilerplate when it "
-                         "appears in >= this many distinct "
-                         "conversations (default 3)")
+    for st in lineage.STAGES:
+        ap.add_argument("--" + st.flag.replace("_", "-"), action="store_true",
+                        help=st.doc)
     args = ap.parse_args(argv)
 
-    from engine.spark import lineage
     from engine.spark.session import get_spark
 
     spark = get_spark(cores=args.cores, app="run-extract")
@@ -136,20 +91,8 @@ def main(argv: list[str] | None = None) -> int:
         snapshot_id=args.snapshot_id,
         n_buckets=args.buckets,
         force=args.force,
-        spans=args.spans,
-        translate=args.translate,
-        dedup=args.dedup,
-        near_dup=args.near_dup,
-        quarantine=args.quarantine,
-        curate=args.curate,
-        curate_max_dup_bigram=args.curate_max_dup_bigram,
-        curate_min_tokens=args.curate_min_tokens,
-        conv_curate=args.conv_curate,
-        conv_min_turns=args.conv_min_turns,
-        conv_max_repeat=args.conv_max_repeat,
-        line_dedup=args.line_dedup,
-        line_dedup_min_df=args.line_dedup_min_df,
         detect_changes=args.detect_changes,
+        **{st.flag: getattr(args, st.flag) for st in lineage.STAGES},
     )
     dt = time.time() - t0
     tps = stats["turns_total"] / dt if dt else 0

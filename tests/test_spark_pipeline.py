@@ -3,6 +3,7 @@ per-turn text equality under stable ordering by (conv_id, turn_idx).
 """
 
 import os
+import shutil
 
 import pandas as pd
 import pytest
@@ -817,17 +818,14 @@ def test_force_subset_keeps_snapshot_total(spark, transcripts_path, tmp_path):
     assert r["turns_total"] == full["turns_total"] == df.count()
 
 
-def test_unknown_stage_flag_raises(spark, transcripts_path, tmp_path,
-                                   monkeypatch):
-    """A stage whose flag is not a run_with_resume keyword is refused
-    before anything is written."""
-    bogus = lineage.Stage("bogus", "bogus", ("turns",), lambda t: t)
-    monkeypatch.setattr(lineage, "STAGES", lineage.STAGES + (bogus,))
+def test_unknown_stage_flag_raises(spark, transcripts_path, tmp_path):
+    """A keyword that names no stage flag is refused before anything is
+    written."""
     out = str(tmp_path / "out")
-    with pytest.raises(ValueError, match="bogus"):
+    with pytest.raises(TypeError, match="spanz"):
         lineage.run_with_resume(
             spark, spark.read.parquet(transcripts_path), out, snapshot_id="s",
-            n_buckets=8,
+            n_buckets=8, spanz=True,
         )
     assert not os.path.exists(out)
 
@@ -920,14 +918,25 @@ def test_stage_rebuilt_after_edit_without_it(spark, transcripts_pdf,
     )
 
 
+@pytest.mark.parametrize(
+    "stages",
+    [
+        pytest.param(("spans", "quarantine"), id="spans+quarantine"),
+        pytest.param(
+            ("spans", "quarantine", "dedup", "near_dup", "line_dedup"),
+            id="publishing",
+        ),
+    ],
+)
 def test_noop_resume_reads_only_lineage(spark, transcripts_path, tmp_path,
-                                        monkeypatch):
+                                        monkeypatch, stages):
     """A no-op resume whose stages are all current opens no table but the
     lineage and appends nothing, also when the quarantine table is sparse
-    (buckets without diverted rows have no partition)."""
+    (buckets without diverted rows have no partition) and when a stage
+    publishes a global table."""
     out = str(tmp_path / "out")
     df = spark.read.parquet(transcripts_path)
-    kw = dict(snapshot_id="s", n_buckets=64, spans=True, quarantine=True)
+    kw = dict(snapshot_id="s", n_buckets=64, **dict.fromkeys(stages, True))
     lineage.run_with_resume(spark, df, out, **kw)
     assert 0 < _n_partitions(out, "quarantine") < _n_partitions(out, "turns")
     lin = os.path.join(out, "_lineage")
@@ -945,6 +954,21 @@ def test_noop_resume_reads_only_lineage(spark, transcripts_path, tmp_path,
     assert r["buckets_processed"] == 0
     assert paths and all(os.path.dirname(p) == lin for p in paths), paths
     assert sorted(os.listdir(lin)) == files
+
+
+def test_missing_published_table_is_republished(spark, transcripts_path,
+                                                tmp_path):
+    """A no-op resume rewrites a publishing stage's global table when the
+    table is missing, equal to the one it replaces."""
+    out = str(tmp_path / "out")
+    df = spark.read.parquet(transcripts_path)
+    kw = dict(snapshot_id="s", n_buckets=8, dedup=True)
+    lineage.run_with_resume(spark, df, out, **kw)
+    clusters = os.path.join(out, "dup_clusters")
+    ref = _table_rows(spark, clusters)
+    shutil.rmtree(clusters)
+    assert lineage.run_with_resume(spark, df, out, **kw)["buckets_processed"] == 0
+    assert _table_rows(spark, clusters) == ref
 
 
 def test_dir_without_stage_rows_rebuilds_stages_once(spark, transcripts_path,
@@ -1215,46 +1239,37 @@ def test_curate_keeps_empty_content_convs(spark, tmp_path):
     assert cur["normal"]["keep"] is True
 
 
-def test_curate_threshold_flags_e2e(spark, tmp_path):
-    """VERDICT r4 ask #8: the curate quality gates are CLI args.  Same
-    input through run_extract.main twice — default gates keep the
-    normal doc and drop the repetitive one; non-default
-    --curate-min-tokens/--curate-max-dup-bigram flip the normal doc to
-    keep=false too, while the RAW metrics stay identical (keep is
-    re-derivable from the stored metrics with any cutoffs)."""
+def test_cli_stage_flags_e2e(spark, tmp_path):
+    """run_extract.main offers one switch per lineage.STAGES entry (the
+    flag with "_" spelled "-"); with every switch on, each stage writes
+    its table and its global table.  The curate gate is fixed: it keeps
+    the normal doc and drops the repetitive one."""
     import run_extract
 
     p = str(tmp_path / "t.parquet")
     spark.createDataFrame(
         [
-            ("normal", 0, "# Title\n\nplain body text with enough tokens here"),
-            ("spammy", 0, "spam spam spam spam spam spam spam spam"),
+            ("normal", 0, "user",
+             "# Title\n\nplain body text with enough tokens here"),
+            ("spammy", 0, "user", "spam spam spam spam spam spam spam spam"),
         ],
-        "conv_id: string, turn_idx: int, text: string",
+        "conv_id: string, turn_idx: int, role: string, text: string",
     ).write.parquet(p)
-    out1, out2 = str(tmp_path / "out1"), str(tmp_path / "out2")
-    common = ["--input", p, "--snapshot-id", "s", "--buckets", "4",
-              "--curate"]
-    assert run_extract.main(common + ["--output", out1]) == 0
+    out = str(tmp_path / "out")
+    switches = ["--" + st.flag.replace("_", "-") for st in lineage.STAGES]
     assert run_extract.main(
-        common
-        + ["--output", out2, "--curate-min-tokens", "1000",
-           "--curate-max-dup-bigram", "0.01"]
+        ["--input", p, "--output", out, "--snapshot-id", "s", "--buckets", "4",
+         *switches]
     ) == 0
-    c1 = {
+    for st in lineage.STAGES:
+        for table in filter(None, (st.out, st.publish)):
+            assert os.path.isdir(os.path.join(out, table)), table
+    cur = {
         r["conv_id"]: r
-        for r in spark.read.parquet(os.path.join(out1, "curation")).collect()
+        for r in spark.read.parquet(os.path.join(out, "curation")).collect()
     }
-    c2 = {
-        r["conv_id"]: r
-        for r in spark.read.parquet(os.path.join(out2, "curation")).collect()
-    }
-    assert c1["normal"]["keep"] is True
-    assert c1["spammy"]["keep"] is False  # dup_bigram_ratio ≈ 1
-    assert c2["normal"]["keep"] is False and c2["spammy"]["keep"] is False
-    for cid in c1:
-        assert c1[cid]["n_tokens"] == c2[cid]["n_tokens"]
-        assert c1[cid]["dup_bigram_ratio"] == c2[cid]["dup_bigram_ratio"]
+    assert cur["normal"]["keep"] is True
+    assert cur["spammy"]["keep"] is False  # dup_bigram_ratio ≈ 1
 
 
 def test_near_dup_stage(spark, transcripts_pdf, tmp_path):
@@ -1316,8 +1331,7 @@ def test_line_dedup_stage_finds_cross_conv_boilerplate(
     df = spark.read.parquet(p)
     out = str(tmp_path / "out")
     lineage.run_with_resume(
-        spark, df, out, snapshot_id="s", n_buckets=8, line_dedup=True,
-        line_dedup_min_df=3,
+        spark, df, out, snapshot_id="s", n_buckets=8, line_dedup=True
     )
     bl = spark.read.parquet(os.path.join(out, "boilerplate_lines"))
     assert bl.filter(F.col("line_df") < 3).count() == 0
