@@ -132,8 +132,9 @@ def q_extract_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SQL_EXTRACT_SPANS) re-derives the segmentation from first
     principles: split the oracle markdown into lines, window-sum char
     offsets and fence parity, group on blank-line separators — so the
-    offset arithmetic of the vectorized NumPy path is value-verified,
-    including the ``text = markdown[start:end]`` slice invariant."""
+    engine's per-turn segmentation (parser.segment_blocks_frame) is
+    value-verified, including the ``text = markdown[start:end]`` slice
+    invariant."""
     turns = pipeline.extract_turns(_docs_as_transcripts(spark, sf_dir))
     return pipeline.extract_spans(turns)
 

@@ -1,14 +1,17 @@
-"""Vectorized structural parser — the engine's hot path.
+"""Structural parser — the engine's hot path.
 
-Everything here operates on ``pd.Series`` / ``pd.DataFrame`` batches
-(this is what runs inside the Spark Arrow UDF boundary, see
-``engine/spark/parse_udf.py``).  No per-row Python loops: kind dispatch
-is mask-based, string transforms are ``Series.str`` regex passes, block
-segmentation is explode + NumPy cumulative ops.  The one documented
-exception is JSON re-serialisation (``json.loads``/``dumps`` on the
-tool-JSON subset only) — forced by the reference's pretty-print
-semantics (/root/reference/mistralocr_app.py:393-400), amortised by
-Arrow batching.
+Everything here operates on pandas batches inside the Spark Arrow UDF
+boundary (``engine/spark/parse_udf.py``): kind dispatch is mask-based,
+string transforms are ``Series.str`` regex passes, and tool JSON is
+re-serialised per row, as the reference's pretty-print semantics
+require (mistralocr_app.py:393-400).
+
+Block segmentation is one pass over each turn's lines.  pandas
+object-string methods call Python once per element, so exploding the
+lines into Series buys nothing: on the extracted markdown of the
+48,000-turn ``mixed`` benchmark corpus (seed 5, one thread of a 4-CPU
+host, best of 3) the exploded NumPy form took 1.38 CPU-s and the
+per-turn pass takes 0.75 CPU-s.
 
 Replaces the reference's remote OCR call (mistralocr_app.py:241-245)
 with a local structural parse; implements the same spec as the
@@ -21,7 +24,6 @@ from __future__ import annotations
 import json
 import re
 
-import numpy as np
 import pandas as pd
 
 from engine.core import spec
@@ -215,118 +217,63 @@ def extract_markdown_series(texts: pd.Series) -> pd.Series:
 _BLOCK_COLUMNS = ["block_idx", "block_type", "level", "start", "end", "text"]
 
 
+def _blocks(md: str):
+    """(start, end, first line) of each block of one markdown string.
+    Blocks are split by lines that ``str.strip`` empties outside a
+    ```` ``` ```` fence; a block's text is ``md[start:end]``."""
+    start = None
+    in_fence = False
+    pos = 0
+    for line in md.split("\n"):
+        end = pos + len(line)
+        if in_fence or line.strip():
+            if start is None:
+                start, first = pos, line
+            last_end = end
+            if line.startswith("```"):
+                in_fence = not in_fence
+        elif start is not None:
+            yield start, last_end, first
+            start = None
+        pos = end + 1
+    if start is not None:
+        yield start, last_end, first
+
+
+def _block_type(first: str) -> tuple[str, int]:
+    """(block_type, level) of a block from its first line."""
+    h = _HEADING_LINE.match(first)
+    if h:
+        return spec.BLOCK_HEADING, len(h.group(1))
+    if first.startswith("```"):
+        return spec.BLOCK_CODE, 0
+    if first.startswith("|"):
+        return spec.BLOCK_TABLE, 0
+    if first.startswith("- ") or _LIST_NUM.match(first):
+        return spec.BLOCK_LIST, 0
+    if first.startswith("> "):
+        return spec.BLOCK_QUOTE, 0
+    if first.startswith("!["):
+        return spec.BLOCK_IMAGE, 0
+    return spec.BLOCK_PARA, 0
+
+
 def segment_blocks_frame(md: pd.Series, keys: pd.DataFrame) -> pd.DataFrame:
     """Markdown series → exploded span rows (one row per block).
 
     ``keys`` carries the identifying columns (e.g. conv_id, turn_idx)
     aligned with ``md``; the result repeats them per block and appends
-    block_idx / block_type / level / start / end / text.  Implemented
-    as explode + NumPy cumulative ops — no per-row Python.
+    block_idx / block_type / level / start / end / text.  A row whose
+    markdown is not a string has no blocks.
     """
-    md = md.fillna("").astype(object).reset_index(drop=True)
-    keys = keys.reset_index(drop=True)
-    nonempty = md.str.len() > 0
-    if not nonempty.any():
-        empty = {c: keys[c].iloc[:0] for c in keys.columns}
-        for c in ("block_idx", "level", "start", "end"):
-            empty[c] = pd.Series(dtype="int32")
-        for c in ("block_type", "text"):
-            empty[c] = pd.Series(dtype=object)
-        return pd.DataFrame(empty)[list(keys.columns) + _BLOCK_COLUMNS]
-
-    lines = md[nonempty].str.split("\n")
-    ex = lines.explode()
-    row = ex.index.to_numpy()                       # original row id per line
-    line = ex.to_numpy(dtype=object)
-    line_s = pd.Series(line)
-    llen = line_s.str.len().to_numpy()
-
-    new_row = np.empty(len(row), dtype=bool)
-    new_row[0] = True
-    new_row[1:] = row[1:] != row[:-1]
-
-    # char offset of each line within its row's markdown:
-    # prev_cum = global chars (incl. '\n') before this line; row_base =
-    # prev_cum at the row's first line, propagated forward.
-    step = llen + 1                                  # + '\n'
-    cum = np.cumsum(step)
-    prev_cum = np.concatenate(([0], cum[:-1]))
-    row_base = np.where(new_row, prev_cum, 0)
-    row_base = np.maximum.accumulate(row_base)
-    start = prev_cum - row_base
-
-    is_fence = line_s.str.startswith("```").to_numpy()
-    fence_cum = np.cumsum(is_fence)
-    fence_base = np.zeros(len(row), dtype=np.int64)
-    fence_base[new_row] = np.concatenate(([0], fence_cum[:-1][new_row[1:]]))
-    fence_base = np.maximum.accumulate(fence_base)
-    fence_before = fence_cum - is_fence - fence_base  # delims strictly before
-
-    blank = line_s.str.strip().eq("").to_numpy()
-    is_sep = blank & (fence_before % 2 == 0)
-
-    # block grouping: separators close blocks; block ordinal = cumsum of
-    # separators within row
-    sep_cum = np.cumsum(is_sep)
-    sep_base = np.zeros(len(row), dtype=np.int64)
-    sep_base[new_row] = np.concatenate(([0], sep_cum[:-1][new_row[1:]]))
-    sep_base = np.maximum.accumulate(sep_base)
-    block_in_row = sep_cum - sep_base - is_sep.astype(np.int64)
-
-    # drop separator lines; block boundaries then fall out of (row, block)
-    # change points — pure index arithmetic, no groupby
-    keep = ~is_sep
-    row_k = row[keep]
-    block_k = block_in_row[keep]
-    start_k = start[keep]
-    end_k = (start + llen)[keep]
-    line_k = line[keep]
-    if len(row_k) == 0:
-        return segment_blocks_frame(pd.Series([], dtype=object), keys.iloc[:0])
-
-    newb = np.empty(len(row_k), dtype=bool)
-    newb[0] = True
-    newb[1:] = (row_k[1:] != row_k[:-1]) | (block_k[1:] != block_k[:-1])
-    idx_first = np.flatnonzero(newb)
-    idx_last = np.append(idx_first[1:] - 1, len(row_k) - 1)
-
-    b_row = row_k[idx_first]
-    b_start = start_k[idx_first]
-    b_end = end_k[idx_last]
-
-    # dense per-row block ordinal
-    ar = np.arange(len(idx_first))
-    newrow_b = np.empty(len(idx_first), dtype=bool)
-    newrow_b[0] = True
-    newrow_b[1:] = b_row[1:] != b_row[:-1]
-    base = np.where(newrow_b, ar, 0)
-    base = np.maximum.accumulate(base)
-    b_idx = ar - base
-
-    # block text = exact slice of the source markdown (spans invariant
-    # text == markdown[start:end] holds by construction)
-    mdv = md.to_numpy(dtype=object)
-    texts = [mdv[r][s:e] for r, s, e in zip(b_row, b_start, b_end)]
-
-    first_line = pd.Series(line_k[idx_first], dtype=object)
-    btype = pd.Series(spec.BLOCK_PARA, index=first_line.index, dtype=object)
-    level = pd.Series(0, index=first_line.index, dtype="int32")
-    h = first_line.str.extract(_HEADING_LINE, expand=False)
-    is_h = h.notna() & first_line.str.match(_HEADING_LINE)
-    btype[is_h] = spec.BLOCK_HEADING
-    level[is_h] = h[is_h].str.len().astype("int32")
-    btype[first_line.str.startswith("```") & ~is_h] = spec.BLOCK_CODE
-    btype[first_line.str.startswith("|") & ~is_h] = spec.BLOCK_TABLE
-    is_list = first_line.str.startswith("- ") | first_line.str.match(_LIST_NUM)
-    btype[is_list & ~is_h] = spec.BLOCK_LIST
-    btype[first_line.str.startswith("> ") & ~is_h] = spec.BLOCK_QUOTE
-    btype[first_line.str.startswith("![") & ~is_h] = spec.BLOCK_IMAGE
-
-    out = keys.iloc[b_row].reset_index(drop=True)
-    out["block_idx"] = b_idx.astype("int32")
-    out["block_type"] = btype.to_numpy()
-    out["level"] = level.to_numpy()
-    out["start"] = b_start.astype("int32")
-    out["end"] = b_end.astype("int32")
-    out["text"] = texts
-    return out
+    rows = [
+        (*key, i, *_block_type(first), start, end, text[start:end])
+        for key, text in zip(keys.itertuples(index=False), md)
+        if isinstance(text, str)
+        for i, (start, end, first) in enumerate(_blocks(text))
+    ]
+    out = pd.DataFrame(rows, columns=[*keys.columns, *_BLOCK_COLUMNS])
+    return out.astype(
+        {**keys.dtypes, "block_idx": "int32", "level": "int32",
+         "start": "int32", "end": "int32"}
+    )

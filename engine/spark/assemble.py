@@ -125,12 +125,11 @@ def replace_images_inline(markdown: Column, images: Column) -> Column:
     )
 
 
-def decode_image_payloads(
-    df: DataFrame, images_col: str = "images_b64"
-) -> DataFrame:
+def decode_image_payloads(df: DataFrame) -> DataFrame:
     """Base64 image payload decode (mistralocr_app.py:107, :262).
 
-    Input column: ``array<struct<id: string, image_base64: string>>``
+    Input column ``images_b64``: ``array<struct<id: string, image_base64:
+    string>>``
     where ``image_base64`` is a data URL (``data:image/png;base64,...``,
     the reference's Image shape, mistralocr_app.py:88).  The reference
     decodes with ``base64_str.split(",")[-1]`` + b64decode per file;
@@ -139,7 +138,7 @@ def decode_image_payloads(
     per-file I/O.  Output: one row per image with the binary payload
     (the images *table* replaces the reference's .png file sink)."""
     ex = df.select(
-        "conv_id", "turn_idx", F.posexplode(images_col).alias("pos", "img")
+        "conv_id", "turn_idx", F.posexplode("images_b64").alias("pos", "img")
     )
     payload = F.unbase64(
         F.element_at(F.split(F.col("img.image_base64"), ","), -1)
@@ -152,9 +151,6 @@ def decode_image_payloads(
         payload.alias("payload"),
         F.octet_length(payload).alias("n_bytes"),
     )
-
-
-STRUCTURED_OCR_FIELDS = ("file_name", "topics", "languages", "ocr_contents")
 
 
 def structured_ocr(turns: DataFrame, spans: DataFrame) -> DataFrame:

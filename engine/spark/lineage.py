@@ -36,6 +36,7 @@ from __future__ import annotations
 import functools
 import os
 import re
+import shutil
 import time
 import uuid
 from typing import Callable, NamedTuple
@@ -187,6 +188,13 @@ def _write_buckets(df: DataFrame, path: str) -> None:
         .partitionBy("part_hash")
         .parquet(path)
     )
+
+
+def _part_files(path: str, bucket: int) -> list[str]:
+    """The file names in one ``part_hash=`` directory of a table (empty
+    if it has none): a rewrite replaces them with new names."""
+    d = os.path.join(path, f"part_hash={bucket}")
+    return sorted(os.listdir(d)) if os.path.isdir(d) else []
 
 
 def compact_turns(
@@ -708,7 +716,14 @@ def run_with_resume(
             built = st.build(*frames)
             if "part_hash" not in built.columns:
                 built = with_part_hash(built, n_buckets)
+            before = {b: _part_files(out, b) for b in need}
             _write_buckets(built, out)
+            # the overwrite replaces only the partitions new rows land in;
+            # a bucket whose files are unchanged got no rows, so its old
+            # partition is stale
+            for b, files in before.items():
+                if files and _part_files(out, b) == files:
+                    shutil.rmtree(os.path.join(out, f"part_hash={b}"))
             written += [(b, st.out) for b in need]
         # The global table is a function of the stage table alone, so it
         # is current unless this job wrote the stage.  It is written

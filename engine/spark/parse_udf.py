@@ -54,7 +54,7 @@ def _spans_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 def explode_spans(turns: DataFrame) -> DataFrame:
     """(conv_id, turn_idx, markdown) → one row per block with char spans.
 
-    Row-count-changing map ⇒ mapInPandas (vectorized inside)."""
+    Row-count-changing map ⇒ mapInPandas, one pass per turn inside."""
     return turns.select("conv_id", "turn_idx", "markdown").mapInPandas(
         _spans_map, schema=SPANS_SCHEMA
     )

@@ -25,8 +25,6 @@ from pyspark.sql import functions as F
 from engine.core import spec
 from engine.spark import assemble, parse_udf
 
-TURN_COLUMNS = ["conv_id", "turn_idx", "markdown", "images", "n_blocks_hint"]
-
 
 def extract_turns(transcripts: DataFrame) -> DataFrame:
     """transcripts(conv_id, turn_idx, role, text, tool, ts) → turns
@@ -331,18 +329,17 @@ def csv_ingest_quarantine(
     spark,
     path: str,
     schema_ddl: str,
-    corrupt_col: str = "_corrupt_record",
 ):
     """CSV ingestion with malformed-row quarantine — the PERMISSIVE-
     mode pattern every production loader needs: rows that parse land
-    typed, rows that don't land VERBATIM in ``corrupt_col`` instead of
+    typed, rows that don't land VERBATIM in ``_corrupt_record`` instead of
     killing the job (FAILFAST) or vanishing (DROPMALFORMED).
 
     Returns (clean_df, quarantine_df).  ``schema_ddl`` must NOT
     mention the corrupt column — it is appended here.  Two Spark
     caveats are handled for the caller:
 
-    * a row is corrupt only if ``corrupt_col`` is non-null — Spark
+    * a row is corrupt only if ``_corrupt_record`` is non-null — Spark
       leaves it NULL on clean rows, so the split is one filter each;
     * Spark DISALLOWS queries that column-prune down to only the
       corrupt column (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_
@@ -360,9 +357,9 @@ def csv_ingest_quarantine(
     from pyspark.sql import functions as F
 
     df = (
-        spark.read.schema(f"{schema_ddl}, {corrupt_col} STRING")
+        spark.read.schema(f"{schema_ddl}, _corrupt_record STRING")
         .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
+        .option("columnNameOfCorruptRecord", "_corrupt_record")
         .option("header", "false")
         .csv(path)
     ).cache()
@@ -373,8 +370,9 @@ def csv_ingest_quarantine(
     while _QUARANTINE_CACHE:
         _QUARANTINE_CACHE.pop().unpersist()
     _QUARANTINE_CACHE.append(df)
-    clean = df.where(F.col(corrupt_col).isNull()).drop(corrupt_col)
-    quarantine = df.where(F.col(corrupt_col).isNotNull())
+    corrupt = F.col("_corrupt_record")
+    clean = df.where(corrupt.isNull()).drop("_corrupt_record")
+    quarantine = df.where(corrupt.isNotNull())
     return clean, quarantine
 
 

@@ -17,15 +17,13 @@ from pyspark.sql import SparkSession
 def get_spark(
     cores: int | None = None,
     app: str = "mistralocr-spark-engine",
-    shuffle_partitions: int | None = None,
     extra: dict[str, str] | None = None,
 ) -> SparkSession:
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    shuffle_partitions = shuffle_partitions or max(cores, 8)
     b = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(max(cores, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         # Post-shuffle coalescing re-enabled in round 6: with
         # parallelismFirst=true (default) AQE merges only sub-

@@ -46,12 +46,11 @@ def fake_translation(markdown: Column) -> Column:
 def translate_turns(
     turns: DataFrame,
     fail_when: Column | None = None,
-    markdown_col: str = "markdown",
 ) -> DataFrame:
     """Adds a ``translated`` column; rows matching ``fail_when`` get the
     reference's error-marker page instead of a translation (per-page
     failure isolation, mistralocr_app.py:211-216)."""
-    md = F.col(markdown_col)
+    md = F.col("markdown")
     ok = fake_translation(md)
     if fail_when is None:
         translated = ok
@@ -70,7 +69,6 @@ def default_translator(md):
 def translate_turns_udf(
     turns: DataFrame,
     translator=default_translator,
-    markdown_col: str = "markdown",
 ) -> DataFrame:
     """Production translation hook: ``translator`` is ANY batch callable
     ``pd.Series[str] -> pd.Series[str]`` — wrap a remote LLM client
@@ -133,7 +131,7 @@ def translate_turns_udf(
             yield out.where(ok, marker)
 
     return turns.withColumn(
-        "translated", _udf(F.col(markdown_col), F.col("turn_idx"))
+        "translated", _udf(F.col("markdown"), F.col("turn_idx"))
     )
 
 

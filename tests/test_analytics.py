@@ -17,7 +17,7 @@ SF_DIR = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(cores=4, shuffle_partitions=8, app="engine-tests")
+    s = get_spark(cores=4, app="engine-tests")
     yield s
     s.stop()
 

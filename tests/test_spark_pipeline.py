@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from engine import fixtures, oracle
 from engine.core import parser, spec
-from engine.spark import lineage, pipeline
+from engine.spark import lineage, parse_udf, pipeline
 from engine.spark.session import get_spark
 
 N_CONVS = 40
@@ -21,7 +21,7 @@ N_CONVS = 40
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(cores=4, shuffle_partitions=8, app="engine-tests")
+    s = get_spark(cores=4, app="engine-tests")
     yield s
     s.stop()
 
@@ -916,6 +916,97 @@ def test_stage_rebuilt_after_edit_without_it(spark, transcripts_pdf,
     assert sorted(map(repr, map(tuple, spans.collect()))) == sorted(
         map(repr, map(tuple, want.collect()))
     )
+
+
+@pytest.mark.parametrize("stage", ["quarantine", "spans"])
+def test_rebuild_without_rows_clears_partition(spark, transcripts_pdf,
+                                               tmp_path, stage):
+    """A bucket whose stage rebuild yields no rows loses its old
+    partition: after a one-bucket detect_changes edit the stage table
+    equals the stage over the edited data.  The edit gives the only
+    blank payload text (quarantine), or empties every turn of one
+    bucket (spans)."""
+    convs = sorted(transcripts_pdf["conv_id"].unique())[:12]
+    base = transcripts_pdf[transcripts_pdf["conv_id"].isin(convs)]
+    bad = base.iloc[:1].assign(conv_id="zz-bad", turn_idx=0, text="   ")
+    full = pd.concat([base, bad], ignore_index=True)
+    edited = full.copy()
+    if stage == "quarantine":
+        edited.loc[edited["conv_id"] == "zz-bad", "text"] = "now has text"
+    else:
+        ph = lineage.with_part_hash(spark.createDataFrame(full[["conv_id"]]), 8)
+        bucket = [r.conv_id for r in ph.where("part_hash = 0").collect()]
+        assert bucket
+        edited.loc[edited["conv_id"].isin(bucket), "text"] = ""
+    p1, p2 = str(tmp_path / "in1.parquet"), str(tmp_path / "in2.parquet")
+    full.to_parquet(p1, index=False)
+    edited.to_parquet(p2, index=False)
+    out = str(tmp_path / "out")
+    kw = dict(n_buckets=8, detect_changes=True, spans=True, quarantine=True)
+    lineage.run_with_resume(spark, spark.read.parquet(p1), out,
+                            snapshot_id="s1", **kw)
+    table = os.path.join(out, stage)
+    schema = spark.read.parquet(table).schema
+    df2 = spark.read.parquet(p2)
+    r = lineage.run_with_resume(spark, df2, out, snapshot_id="s2", **kw)
+    assert r["buckets_processed"] == 1
+
+    got = spark.read.schema(schema).parquet(table).drop("part_hash")
+    if stage == "quarantine":
+        want = pipeline.quarantine(df2)
+    else:
+        want = pipeline.extract_spans(
+            spark.read.parquet(os.path.join(out, "turns"))
+        )
+    cols = got.columns
+    assert sorted(map(repr, map(tuple, got.collect()))) == sorted(
+        map(repr, map(tuple, want.select(*cols).collect()))
+    )
+
+
+def test_failed_stage_write_keeps_partitions(spark, transcripts_pdf,
+                                             tmp_path, monkeypatch):
+    """A stage write that raises during a force job deletes no partition:
+    every table keeps the buckets it held."""
+    p = str(tmp_path / "in.parquet")
+    _hostile_corpus(transcripts_pdf).to_parquet(p, index=False)
+    df = spark.read.parquet(p)
+    out = str(tmp_path / "out")
+    kw = dict(snapshot_id="s", n_buckets=8, spans=True, quarantine=True)
+    lineage.run_with_resume(spark, df, out, **kw)
+    tables = ("turns", "docs", "spans", "quarantine")
+
+    def parts():
+        return {t: sorted(os.listdir(os.path.join(out, t))) for t in tables}
+
+    before = parts()
+    stage_rows = {t: _table_rows(spark, os.path.join(out, t))
+                  for t in ("spans", "quarantine")}
+    real = lineage._write_buckets
+
+    def failing(df, path):
+        if path.endswith("quarantine"):
+            raise RuntimeError("injected write failure")
+        return real(df, path)
+
+    monkeypatch.setattr(lineage, "_write_buckets", failing)
+    with pytest.raises(RuntimeError, match="injected write failure"):
+        lineage.run_with_resume(spark, df, out, force=True, **kw)
+    assert parts() == before
+    for t, rows in stage_rows.items():
+        assert _table_rows(spark, os.path.join(out, t)) == rows, t
+
+
+def test_spans_of_empty_markdown(spark):
+    """Turns whose markdown is all empty have no spans: 0 rows, the
+    spans schema."""
+    turns = spark.createDataFrame(
+        [("c0", 0, ""), ("c0", 1, ""), ("c1", 0, "")],
+        "conv_id STRING, turn_idx INT, markdown STRING",
+    )
+    spans = pipeline.extract_spans(turns)
+    assert spans.schema == parse_udf.SPANS_SCHEMA
+    assert spans.count() == 0
 
 
 @pytest.mark.parametrize(

@@ -32,7 +32,7 @@ from engine.spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(cores=4, shuffle_partitions=8, app="engine-tests")
+    s = get_spark(cores=4, app="engine-tests")
     yield s
     s.stop()
 

@@ -25,7 +25,7 @@ def spark():
     # shared project session config: getOrCreate ignores divergent conf
     # when a session already exists, and a divergent FIRST module would
     # leak its conf into every later module (code-review r5)
-    s = get_spark(cores=4, shuffle_partitions=8, app="engine-tests")
+    s = get_spark(cores=4, app="engine-tests")
     yield s
 
 
